@@ -132,9 +132,10 @@ def minhash_signatures(
     int64 < 2^44 (m ≈ 2^40, k ≤ 12 ⇒ h1 + i·h2 < 2^44), so the numpy
     arithmetic is EXACT integer arithmetic — provably bit-identical to
     the fold expression, with no float-rounding caveat at all (unlike
-    the GEMM screens elsewhere, which therefore keep an exact JVM
-    verify). ``vectorized=False`` keeps the pure-expression fold; a
-    pytest pins the two paths equal on the corpus plus edge cases.
+    :func:`exact_threshold_pairs`' float64 GEMM, which therefore keeps
+    an exact JVM verify). ``vectorized=False`` keeps the pure-expression
+    fold; a pytest pins the two paths equal on the corpus plus edge
+    cases.
     """
     m = F.lit(KM_MODULUS)
     hexes = F.transform("sh", lambda s: F.md5(s))

@@ -72,104 +72,6 @@ def _two_phase_topk(
     )
 
 
-def _topk_candidates_gemm(
-    corpus: DataFrame,
-    q_rows: list,
-    k: int,
-    id_col: str,
-    query_id_col: str,
-    qid_type: str,
-    id_type: str,
-    eps: float = 2e-9,
-) -> DataFrame:
-    """GEMM candidate screen for :func:`brute_force_topk` (optimization
-    r13, guide §4.2 — the exact_threshold_pairs discipline): per Arrow
-    batch, one numpy float64 GEMM scores every (corpus row, query)
-    pair and keeps, per query, only the rows that can still reach the
-    exact top-k — everything within ``eps`` of the batch's (k+1)-th
-    best non-null similarity (k+1, not k, because the screen does NOT
-    apply the self-match exclusion: query ids may compare to corpus
-    ids under Spark's own cast rules, so the exclusion stays in the
-    JVM, and at most ONE self row per query can displace the band).
-    The exact stage then re-scores only candidates with the identical
-    fold expressions and re-ranks with the unchanged two-phase top-k —
-    bit-identical results for ANY partitioning, since the global exact
-    top-k is a subset of the union of per-batch (k+1)-bands under the
-    same total order.
-
-    NULL placement mirrors the fold exactly (``norm·norm > 0`` is
-    sign-exact); null-sim rows rank last by id, so they are kept only
-    when a batch has fewer than k+1 non-null rows — then the k+1
-    smallest-id nulls (any null row in the global top-k is among the
-    k+1 smallest-id nulls of its own batch). Any NaN for a query in a
-    batch keeps the whole batch for that query (the verify decides).
-    Emits candidate rows as (query_id, id, _cv) — the vector rides
-    along so the corpus is scanned exactly once.
-    """
-    import numpy as np
-
-    qids = [r[0] for r in q_rows]
-    qvecs = [r[1] for r in q_rows]
-
-    def _screen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0 or not qids:
-                continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_cv"]]
-            )
-            # a NULL or dimension-mismatched query vector scores NULL
-            # against every row in the fold (zip_with null-pads); a
-            # zero row reproduces exactly that via the denom>0 gate
-            Q = np.asarray(
-                [
-                    v
-                    if v is not None and len(v) == V.shape[1]
-                    else np.zeros(V.shape[1])
-                    for v in qvecs
-                ],
-                dtype=np.float64,
-            )
-            qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-            vn = np.sqrt(np.einsum("ij,ij->i", V, V))
-            denom = vn[:, None] * qn[None, :]
-            ok = denom > 0
-            sims = np.full((n, len(qids)), np.nan)
-            np.divide(V @ Q.T, denom, out=sims, where=ok)
-            out_q, out_i, out_v = [], [], []
-            order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-            for j, qid in enumerate(qids):
-                col_ok = ok[:, j]
-                s = sims[:, j]
-                if np.isnan(s[col_ok]).any():
-                    keep = np.ones(n, dtype=bool)  # NaN: verify decides
-                else:
-                    keep = np.zeros(n, dtype=bool)
-                    nn = int(col_ok.sum())
-                    if nn > k + 1:
-                        vals = s[col_ok]
-                        thr = np.partition(vals, nn - (k + 1))[nn - (k + 1)]
-                        keep = col_ok & (s >= thr - eps)
-                    else:
-                        keep = col_ok.copy()
-                    if nn < k + 1:
-                        null_idx = order[~col_ok[order]][: k + 1]
-                        keep[null_idx] = True
-                idx = np.nonzero(keep)[0]
-                out_q.extend([qid] * len(idx))
-                out_i.extend(pdf[id_col].iloc[idx])
-                out_v.extend(pdf["_cv"].iloc[idx])
-            yield __import__("pandas").DataFrame(
-                {query_id_col: out_q, id_col: out_i, "_cv": out_v}
-            )
-
-    return corpus.select(id_col, "_cv").mapInPandas(
-        _screen,
-        f"{query_id_col} {qid_type}, {id_col} {id_type}, _cv array<double>",
-    )
-
-
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -180,47 +82,41 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
-    The corpus is scanned once; a GEMM candidate screen
-    (:func:`_topk_candidates_gemm`, optimization r13 — guide §4.2)
-    narrows each query to the ~k rows that can reach the exact top-k,
-    and the exact cosine fold + TWO-PHASE ranking
-    (:func:`_two_phase_topk`) — both unchanged — decide over just the
-    candidates, so the baseline never funnels the corpus through
-    |queries| reducer tasks nor pays |corpus|·|queries| interpreted
-    folds. Self-matches excluded (in the JVM, after the screen).
-    Deterministic tie-break on neighbor id; results bit-identical to
-    the full cross for any partitioning.
+    The (broadcast) query side crosses the corpus once — a
+    BroadcastNestedLoopJoin scanning the corpus a single time for ALL
+    queries — then the per-query top-k runs as a TWO-PHASE ranking
+    (:func:`_two_phase_topk`): per-input-partition top-k first, global
+    top-k over the k·P survivors second, so the exact baseline itself
+    never funnels the corpus through |queries| reducer tasks.
+    Self-matches excluded. Deterministic tie-break on neighbor id.
     """
-    # norms HOISTED to one per row (optimization r12): the exact stage
-    # computes norm(q) once per query row and norm(c) once per
-    # CANDIDATE row — same expressions, same operand order
-    # (norm(q)·norm(c)), so every double — and the NULL gate on zero
-    # denominators — is bit-identical to cosine().
+    # norms HOISTED to one per row before the cross (optimization r12,
+    # guide §4.1 built-ins/§1.2 per-task work): the interpreted
+    # zip_with/aggregate norm lambda used to re-run per PAIR —
+    # |corpus|·|queries| times per side — inside cosine(); computing it
+    # once per query row and once per corpus row cuts the per-pair
+    # arithmetic to the dot alone (~3×). Same expressions, same
+    # operand order (norm(q)·norm(c)), so every double — and the NULL
+    # gate on zero denominators — is bit-identical to cosine().
+    # Optimization r13 note: a numpy GEMM candidate screen in front of
+    # this exact fold (mapInPandas over the corpus, a collect() of the
+    # query side, the fold re-run on the survivors) LOST at
+    # local[2]/sf0.1 — perfbench retrieval_iterative medians over 6
+    # alternating pairs on 4 vCPUs: warm pass 4.30 s fold vs 5.00 s
+    # screen, cold 14.1 vs 16.1 s, 9.0 vs 10.7 cpu-s per pass — and it
+    # crashed its Python worker on NULL or ragged vectors and non-long
+    # ids. Kept the single fold deliberately.
     q = F.broadcast(
         queries.select(
             F.col(query_id_col), as_double(vec_col).alias("_qv")
         ).withColumn("_qn", norm(F.col("_qv")))
     )
-    qid_type = queries.select(F.col(query_id_col)).schema[0].dataType.simpleString()
-    id_type = embeddings.select(F.col(id_col)).schema[0].dataType.simpleString()
-    q_rows = [
-        (r[0], [float(x) for x in r[1]] if r[1] is not None else [])
-        for r in queries.select(
-            F.col(query_id_col), as_double(vec_col)
-        ).collect()
-    ]
-    cand = _topk_candidates_gemm(
-        embeddings.select(F.col(id_col), as_double(vec_col).alias("_cv")),
-        q_rows,
-        k,
-        id_col,
-        query_id_col,
-        qid_type,
-        id_type,
+    c = embeddings.select(
+        F.col(id_col), as_double(vec_col).alias("_cv")
     ).withColumn("_cn", norm(F.col("_cv")))
     denom = F.col("_qn") * F.col("_cn")
     scored = (
-        cand.join(q, query_id_col)
+        c.crossJoin(q)
         .filter(F.col(id_col) != F.col(query_id_col))
         .select(
             query_id_col,
@@ -392,83 +288,6 @@ def ivf_topk(
     )
 
 
-def _assign_candidates_gemm(
-    vecs: DataFrame,
-    cent_rows: list,
-    nulls_first: bool,
-    eps: float = 2e-9,
-) -> DataFrame:
-    """GEMM candidate screen for :func:`_assign_nearest` (optimization
-    r13, guide §4.2 — the exact_threshold_pairs discipline): one numpy
-    float64 GEMM per Arrow batch scores every (vector, centroid) pair
-    and keeps, per row, ONLY the cells whose exact-fold argmax could
-    still win — everything within ``eps`` of the batch max (float64
-    GEMM vs sequential fold differ by ≤ ~dim·ε·Σ|xᵢyᵢ| ≈ 1e-13 on
-    unit-scale similarities, so the true winner is always inside the
-    2e-9 band; ties at the exact level are within 0 of each other and
-    are all kept). The EXACT argmax is then re-derived in the JVM by
-    the same higher-order fold expression as before, restricted to the
-    candidate cells — bit-identical winners, ~k× less interpreted
-    arithmetic.
-
-    NULL-similarity handling mirrors the fold exactly: the gate
-    ``norm(v)·norm(c) > 0`` is sign-exact in both engines (a norm is 0
-    iff the vector is all-zero), so the null masks agree bit-for-bit;
-    ``nulls_first`` rows with any null-sim cell keep exactly the
-    null-sim cells (the flag-prefixed struct order makes them all
-    outrank every scored cell), default rows with ALL cells null keep
-    every cell. Any NaN in a row's scores falls back to keeping every
-    cell (the exact verify decides — Spark orders NaN greatest, numpy
-    propagates, so the screen never guesses).
-
-    Returns (_id, _v, _cand array<long>). ``cent_rows`` is the
-    collected ≤k-row (cell, _cv) table — the same data the 1-row
-    broadcast carries, shipped once per task in the closure.
-    """
-    import numpy as np
-
-    cells_np = np.asarray([int(r[0]) for r in cent_rows], dtype=np.int64)
-    C = np.asarray([r[1] for r in cent_rows], dtype=np.float64)
-    cn = np.sqrt(np.einsum("ij,ij->i", C, C))
-
-    def _screen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-            )
-            vn = np.sqrt(np.einsum("ij,ij->i", V, V))
-            denom = vn[:, None] * cn[None, :]
-            ok = denom > 0  # sign-exact gate, identical to the fold
-            sims = np.full((n, len(cells_np)), np.nan)
-            np.divide(V @ C.T, denom, out=sims, where=ok)
-            cands = []
-            for i in range(n):
-                row_ok = ok[i]
-                s = sims[i]
-                if nulls_first and (~row_ok).any():
-                    keep = ~row_ok  # null sims outrank every score
-                elif not row_ok.any():
-                    keep = np.ones_like(row_ok)  # all null: verify all
-                elif np.isnan(s[row_ok]).any():
-                    keep = np.ones_like(row_ok)  # NaN: verify decides
-                else:
-                    best = s[row_ok].max()
-                    keep = row_ok & (s >= best - eps)
-                cands.append(cells_np[keep])
-            out = pdf[["_id", "_v"]].copy()
-            out["_cand"] = cands
-            yield out
-
-    return vecs.select("_id", "_v").mapInPandas(
-        _screen, "_id long, _v array<double>, _cand array<long>"
-    )
-
-
 def _assign_nearest(
     vecs: DataFrame, cents: DataFrame, nulls_first: bool = False
 ) -> DataFrame:
@@ -503,25 +322,7 @@ def _assign_nearest(
     pair stage). The arithmetic stays ``dot / (n_v · n_c)`` with the
     identical sqrt(sequential-fold) operands, so every similarity is
     bit-equal to the unhoisted expression and the oracles don't change.
-
-    Optimization r13 (guide §4.2, the exact_threshold_pairs
-    discipline): a numpy GEMM candidate screen
-    (:func:`_assign_candidates_gemm`) first narrows each row to the
-    cells that can still win the exact argmax (usually ONE), and the
-    higher-order fold expression above — unchanged — re-derives the
-    exact winner over just those candidates, so the interpreted
-    per-(vector, centroid) arithmetic drops ~k× while every winner,
-    tie-break, and NULL placement is decided by the same expressions
-    as before (bit-identical; the oracles don't move). The centroid
-    table is pinned once and collected (≤ k rows — the same data the
-    1-row broadcast already materializes) to feed the screen.
     """
-    cents = cents.localCheckpoint(eager=True)  # one evaluation: the
-    # GEMM screen's collect below + the verify broadcast read the pin
-    cent_rows = [
-        (r[0], list(r[1])) for r in cents.select("cell", "_cv").collect()
-    ]
-    cand = _assign_candidates_gemm(vecs, cent_rows, nulls_first)
     cents_arr = F.broadcast(
         cents.select(
             F.col("cell"), F.col("_cv"), norm(F.col("_cv")).alias("_cn")
@@ -535,17 +336,10 @@ def _assign_nearest(
     sim = lambda c: F.when(  # noqa: E731
         denom(c) > 0, dot(F.col("_v"), c["_cv"]) / denom(c)
     )
-    # exact verify over the candidate cells only: filter BEFORE scoring
-    # (so only candidates pay the dot fold), then the same struct
-    # expressions as the full argmax
-    cand_cents = F.filter(
-        F.col("_cents"),
-        lambda c: F.array_contains(F.col("_cand"), c["cell"].cast("long")),
-    )
     # score once per candidate (one dot fold each), THEN optionally wrap
     # with the is-null flag — keeps the expensive fold single-evaluated
     scored = F.transform(
-        cand_cents,
+        "_cents",
         lambda c: F.struct(
             sim(c).alias("_sim"), (-c["cell"]).cast("long").alias("_negc")
         ),
@@ -561,7 +355,7 @@ def _assign_nearest(
         )
     best = F.array_max(scored)
     return (
-        cand.withColumn("_vn", norm(F.col("_v")))
+        vecs.withColumn("_vn", norm(F.col("_v")))
         .crossJoin(cents_arr)
         .select(F.col("_id"), (-best["_negc"]).alias("cell"), F.col("_v"))
     )
@@ -1724,57 +1518,6 @@ def _adc_lut_sum(m: int) -> Column:
     return out
 
 
-def _pq_encode_candidates_gemm(
-    nv_frame: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str,
-    eps: float = 2e-9,
-) -> DataFrame:
-    """GEMM candidate screen for :func:`_pq_encode_nv` (optimization
-    r13, guide §4.2 — the same discipline as
-    :func:`_assign_candidates_gemm`): per subspace, one numpy float64
-    GEMM computes the ``−2⟨a,c⟩ + ⟨c,c⟩`` distance surrogate of every
-    (vector, codeword) pair and keeps only the codeword indices within
-    ``eps`` of the row minimum (float64 GEMM vs the sequential
-    :func:`_pq_dist` fold differ by ≤ ~dim·ε on unit-scale terms, far
-    inside 2e-9, so the exact argmin — and every exact tie — is always
-    kept; a NaN row falls back to keeping every index). The exact
-    argmin is re-derived by the unchanged fold expression over just
-    the candidates. Returns (id, _nv, _cand_0.._cand_{m-1})."""
-    import numpy as np
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    CC = [np.einsum("ij,ij->i", c, c) for c in C]
-
-    def _screen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_nv"]]
-            )
-            out = pdf[[id_col, "_nv"]].copy()
-            for s in range(m):
-                Vs = V[:, s * sub : (s + 1) * sub]
-                D = -2.0 * (Vs @ C[s].T) + CC[s][None, :]
-                dmin = np.nanmin(D, axis=1)
-                keep = D <= (dmin + eps)[:, None]
-                keep |= np.isnan(D).any(axis=1)[:, None]  # NaN: verify all
-                out[f"_cand_{s}"] = [
-                    np.nonzero(keep[i])[0].astype(np.int32)
-                    for i in range(n)
-                ]
-            yield out
-
-    schema = f"{id_col} long, _nv array<double>, " + ", ".join(
-        f"_cand_{s} array<int>" for s in range(m)
-    )
-    return nv_frame.select(id_col, "_nv").mapInPandas(_screen, schema)
-
-
 def _pq_encode_nv(
     nv_frame: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1790,36 +1533,19 @@ def _pq_encode_nv(
     per-subspace argmin runs inside one higher-order expression over
     the broadcast codeword array (index lambda → struct(d, j) →
     array_min), the exact ordering of the oracle's
-    ``ORDER BY d ASC, j ASC``.
-
-    Optimization r13 (guide §4.2): a numpy GEMM screen
-    (:func:`_pq_encode_candidates_gemm`) first narrows each subspace to
-    the codeword indices that can still win the exact argmin (usually
-    ONE), and the fold expression — unchanged — re-derives the exact
-    winner over just those candidates: ~k_codes× less interpreted
-    per-row arithmetic, bit-identical codes (candidates are filtered
-    BEFORE the distance fold evaluates, so only they pay it)."""
+    ``ORDER BY d ASC, j ASC``."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    out = _pq_encode_candidates_gemm(nv_frame, codebooks, id_col).crossJoin(
+    out = nv_frame.crossJoin(
         _codebook_frame(nv_frame.sparkSession, codebooks)
     )
 
     def _argmin(s: int) -> Column:
         ssub = F.slice("_nv", s * sub + 1, sub)
-        idx = F.transform(
+        cands = F.transform(
             F.element_at("_cb", s + 1),
             lambda cw, j: F.struct(
-                cw.alias("cw"), j.cast("int").alias("j")
-            ),
-        )
-        flt = F.filter(
-            idx, lambda t: F.array_contains(F.col(f"_cand_{s}"), t["j"])
-        )
-        cands = F.transform(
-            flt,
-            lambda t: F.struct(
-                _pq_dist(ssub, t["cw"]).alias("d"), t["j"].alias("j")
+                _pq_dist(ssub, cw).alias("d"), j.cast("int").alias("j")
             ),
         )
         return F.array_min(cands)["j"].alias(f"code_{s}")

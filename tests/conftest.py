@@ -19,3 +19,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def duck(sf_dir):
+    """DuckDB connection with a view per testdata table — the oracle
+    side of tools/check_oracle.py."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in [
+        "region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings",
+    ]:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    yield con
+    con.close()

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from covid_custom_sql_engine_spark.catalog import load_table
@@ -264,6 +265,77 @@ def test_assign_cells_frozen_centroids(spark):
         for r in sim.assign_cells(new.repartition(5), cents).collect()
     }
     assert again == out
+    dirty = spark.createDataFrame(
+        [(105, None), (106, [0.7])], "vec_id long, embedding array<float>"
+    )
+    # NULL vector: norm NULL -> every sim NULL; ragged vector: zip_with
+    # NULL-pads the missing element, so the dot fold sums to NULL. All
+    # sims NULL tie on the NULLS FIRST flag; the -cell key picks cell 0.
+    assert {
+        r.vec_id: r.cell for r in sim.assign_cells(dirty, cents).collect()
+    } == {105: 0, 106: 0}
+    named = spark.createDataFrame(
+        [("a", [0.9, 0.1]), ("b", [0.1, 0.8])],
+        "vec_id string, embedding array<float>",
+    )
+    # the id only rides along: a string id takes the same cosine argmax
+    assert sorted(
+        (r.vec_id, r.cell) for r in sim.assign_cells(named, cents).collect()
+    ) == [("a", 0), ("b", 1)]
+
+
+@pytest.mark.parametrize("dirty", [None, [0.3]], ids=["null", "ragged"])
+def test_brute_force_topk_dirty_corpus_vector(spark, dirty):
+    """A NULL or ragged corpus vector scores NULL and ranks last."""
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, dirty), (3, [0.6, 0.8]), (4, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    qs = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "query_id long, embedding array<float>"
+    )
+    got = [
+        r.vec_id
+        for r in sorted(
+            sim.brute_force_topk(corpus, qs, k=2).collect(),
+            key=lambda r: r.rank,
+        )
+    ]
+    # id 2's cosine is NULL (NULL norm, or zip_with NULL-pads the short
+    # vector so the dot fold sums to NULL); desc_nulls_last ranks it
+    # below every scored row, so its smaller id cannot win the k=2 cut
+    assert got == [1, 3]
+
+
+@pytest.mark.parametrize(
+    "rows, schema, expected",
+    [
+        (
+            [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0])],
+            "vec_id long, embedding array<float>",
+            [(1, 0, 1), (2, 0, 0), (3, 1, 0)],
+        ),
+        (
+            [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
+            "vec_id string, embedding array<float>",
+            [("a", 0, 1), ("b", 1, 0)],
+        ),
+    ],
+    ids=["null_vector", "string_id"],
+)
+def test_pq_encode_dirty_input(spark, rows, schema, expected):
+    """PQ codes are defined for a NULL vector and for a string id."""
+    cbs = [[[1.0], [0.0]], [[1.0], [0.0]]]
+    got = sorted(
+        tuple(r) for r in sim.pq_encode(spark.createDataFrame(rows, schema), cbs)
+        .select("vec_id", "code_0", "code_1")
+        .collect()
+    )
+    # per subspace the argmin of struct(d, j): a unit coordinate of 1
+    # is nearest codeword [1.0] (j=0), a 0 nearest [0.0] (j=1). A NULL
+    # vector gives d NULL for every codeword; NULL sorts first in the
+    # struct order, so array_min keeps the smallest index, j=0.
+    assert got == expected
 
 
 def test_rrf_fuse_semantics(spark):
@@ -836,3 +908,36 @@ def test_exact_threshold_pairs_multiblock_budget(spark, sf_dir):
     }
     assert wide, "fixture must contain qualifying pairs"
     assert tiny == wide
+
+
+# Registry queries that reach brute_force_topk, _assign_nearest or
+# _pq_encode_nv, run against their DuckDB oracles on the default path.
+RETRIEVAL_ORACLE_QUERIES = [
+    "cosine_topk",
+    "ivf_topk",
+    "ivf_incremental_assign",
+    "kmeans_semdedup",
+    "semdedup_prune",
+    "pq_topk_recall",
+    "ivfpq_residual_recall",
+    "filtered_ann_topk",
+]
+
+
+@pytest.mark.parametrize("name", RETRIEVAL_ORACLE_QUERIES)
+def test_retrieval_query_matches_oracle(spark, sf_dir, duck, name):
+    """Same rows as the query's DuckDB oracle, compared as
+    tools/check_oracle.py compares them (row count, column names,
+    order-insensitive normalized values)."""
+    import __spark_entry__ as entrymod
+    from tools.check_oracle import table_key
+
+    sdf = entrymod.queries()[name](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    res = duck.execute(entrymod.oracle_sql()[name])
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    assert srows, "an empty result would compare equal vacuously"
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert len(srows) == len(drows)
+    assert table_key(srows, sdf.columns) == table_key(drows, dcols)

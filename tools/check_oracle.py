@@ -12,10 +12,11 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # The only DuckDB output types the driver's hash canonicalization is known
 # to render identically to Spark's. Anything else (HUGEINT from integer
