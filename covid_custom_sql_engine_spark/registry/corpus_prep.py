@@ -534,7 +534,9 @@ def _bpe_round_cte(r: int) -> str:
     desc, pair asc) → greedy non-overlapping positional pick (matches
     as gaps-and-islands runs; within a run of consecutive match
     positions greedy takes every other one starting at the run head —
-    exactly the engine's left-to-right fold) → rebuild token arrays."""
+    exactly the engine's left-to-right regex rewrite) → rebuild token
+    arrays. ``bs`` is LEFT-joined, so a round without a pair leaves the
+    token arrays as they are, as the engine's loop does."""
     p = r - 1
     return f"""
     pr{r} AS (SELECT doc_id, i, toks[i] AS x, toks[i + 1] AS y
@@ -557,7 +559,7 @@ def _bpe_round_cte(r: int) -> str:
                      list(CASE WHEN p.i IS NOT NULL THEN b.x || '_' || b.y
                                ELSE e.tok END ORDER BY e.j) AS toks
               FROM ex{r} e
-              CROSS JOIN bs{r} b
+              LEFT JOIN bs{r} b ON TRUE
               LEFT JOIN pk{r} p ON p.doc_id = e.doc_id AND p.i = e.j
               LEFT JOIN pk{r} q ON q.doc_id = e.doc_id AND q.i = e.j - 1
               WHERE q.i IS NULL
@@ -602,10 +604,11 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, take the deterministic argmax, greedily apply the merge to
     every document, recount. The ordered merge table is the training
     artifact; the oracle unrolls the identical rounds with the greedy
-    fold expressed positionally (gaps-and-islands parity pick), the
+    pick expressed positionally (gaps-and-islands parity pick), the
     label_propagation generated-oracle discipline. Per round: one
     pair-count aggregate + a TakeOrdered(1) + a 1-row broadcast onto a
-    zero-shuffle per-row fold."""
+    zero-shuffle per-row ``regexp_replace`` rewrite of the token
+    array."""
     d = parallelize_small(load_table(spark, sf_dir, "documents"))
     return cp.bpe_train(d, rounds=_BPE_ROUNDS)
 

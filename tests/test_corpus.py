@@ -3,6 +3,7 @@ k-means step."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from covid_custom_sql_engine_spark.functions import corpus as cp
@@ -431,6 +432,88 @@ def test_bpe_apply_greedy_overlap(spark):
     assert rows[0].m == ["b_b", "b_b"]
     assert rows[1].m == ["b_b", "b"]
     assert rows[2].m == ["x", "b_b"]
+
+
+def _greedy_merge(toks, a, b):
+    """Reference BPE apply: scan left to right, merge each (a, b) and
+    skip past it."""
+    out, i = [], 0
+    while i < len(toks):
+        if i + 1 < len(toks) and toks[i] == a and toks[i + 1] == b:
+            out.append(f"{a}_{b}")
+            i += 2
+        else:
+            out.append(toks[i])
+            i += 1
+    return out
+
+
+# regex and replacement metacharacters, merged tokens, non-ASCII
+_BPE_ALPHABET = [
+    "$", "$1", "\\", "\\Q", "\\E", ".", "*", "(", "[x]", "{2}",
+    "a", "b", "a_b", "b_b", "é", "x",
+]
+
+
+def test_bpe_apply_matches_greedy_fold_random(spark):
+    """Seeded random token arrays built from runs (so a == b runs of
+    odd and even length occur), one-token arrays included, each with a
+    merge pair drawn from the array half the time."""
+    import random
+
+    rng = random.Random(7)
+    rows = []
+    for _ in range(2000):
+        toks = []
+        for _ in range(rng.choice([1, 1, 2, 3, 5])):
+            toks += [rng.choice(_BPE_ALPHABET)] * rng.randint(1, 4)
+        toks = toks[: rng.randint(1, 12)]
+        if len(toks) >= 2 and rng.random() < 0.5:
+            i = rng.randrange(len(toks) - 1)
+            a, b = toks[i], toks[i + 1]
+        else:
+            a, b = rng.choice(_BPE_ALPHABET), rng.choice(_BPE_ALPHABET)
+        rows.append((toks, a, b))
+    df = spark.createDataFrame(rows, "t array<string>, a string, b string")
+    got = df.select(
+        "t", "a", "b",
+        cp._apply_bpe_merge(F.col("t"), F.col("a"), F.col("b")).alias("m"),
+    ).collect()
+    assert len(got) == len(rows)
+    assert sum(r.m != r.t for r in got) > 500, "too few rows merge anything"
+    bad = [r for r in got if r.m != _greedy_merge(r.t, r.a, r.b)]
+    assert not bad, bad[:5]
+
+
+def test_bpe_apply_long_run(spark):
+    """10,000 x b with merge (b, b) gives 5,000 x b_b."""
+    df = spark.createDataFrame([(["b"] * 10_000,)], "t array<string>")
+    (row,) = df.select(
+        cp._apply_bpe_merge(F.col("t"), F.lit("b"), F.lit("b")).alias("m")
+    ).collect()
+    assert row.m == ["b_b"] * 5_000
+
+
+def test_bpe_dirty_input(spark):
+    """Empty frames, NULL and blank texts return defined output; a round
+    without a pair adds no merge row and leaves every document as it
+    is."""
+    for rows in ([], [(1, None), (2, "   "), (3, "\t\n")]):
+        df = _docs(spark, rows)
+        assert cp.bpe_train(df, rounds=2).collect() == []
+        assert cp.bpe_encode(df, rounds=2).collect() == []
+    df = _docs(spark, [(1, None), (2, " "), (3, "A b"), (4, "solo")])
+    merges = cp.bpe_train(df, rounds=3).collect()
+    assert [tuple(r) for r in merges] == [(1, "a", "b", 1)]
+    enc = {r.doc_id: tuple(r)[1:] for r in cp.bpe_encode(df, rounds=3).collect()}
+    assert enc == {3: (["a_b"], 2, 1), 4: (["solo"], 1, 1)}
+
+
+@pytest.mark.parametrize(
+    "name", ["bpe_pair_counts", "bpe_train_merges", "bpe_encoded_lengths"]
+)
+def test_bpe_query_matches_oracle(matches_oracle, name):
+    matches_oracle(name)
 
 
 def test_dsir_weights_monotone_and_numpy_twin(spark):

@@ -925,19 +925,5 @@ RETRIEVAL_ORACLE_QUERIES = [
 
 
 @pytest.mark.parametrize("name", RETRIEVAL_ORACLE_QUERIES)
-def test_retrieval_query_matches_oracle(spark, sf_dir, duck, name):
-    """Same rows as the query's DuckDB oracle, compared as
-    tools/check_oracle.py compares them (row count, column names,
-    order-insensitive normalized values)."""
-    import __spark_entry__ as entrymod
-    from tools.check_oracle import table_key
-
-    sdf = entrymod.queries()[name](spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(entrymod.oracle_sql()[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    assert srows, "an empty result would compare equal vacuously"
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert len(srows) == len(drows)
-    assert table_key(srows, sdf.columns) == table_key(drows, dcols)
+def test_retrieval_query_matches_oracle(matches_oracle, name):
+    matches_oracle(name)
