@@ -1,18 +1,37 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Baseline: brute-force cosine top-k via built-in higher-order functions
-(``zip_with`` + ``aggregate`` — JVM-side, no Python in the loop).
-Scale path: LSH bucketing via random-hyperplane signs so candidate
-generation is an equi-join on a bucket key instead of a cross product.
+Every top-k entry point is a candidate generator, a scorer and a ranker.
+All arithmetic is in double after casting the float arrays, with
+sequential left-to-right summation (``zip_with`` + ``aggregate``, JVM
+side, no Python in the loop), so a SQL oracle mirrors every value.
 
-All arithmetic is done in double after casting the float arrays, with
-sequential left-to-right summation — deterministic and mirrorable by a
-SQL oracle.
+Candidate generators (query × corpus pairs):
+
+- full broadcast cross: :func:`brute_force_topk`, :func:`int8_topk`,
+  :func:`hamming_topk`, :func:`pq_topk`, :func:`diversified_topk`
+- hyperplane bucket equi-join: :func:`lsh_topk`
+- probed cells (:func:`_probe`) joined to the cell assignment
+  (:func:`_assign_nearest`): :func:`ivf_topk` and, over PQ postings,
+  the one IVF-PQ serve body :func:`_ivfpq_serve` behind
+  :func:`ivfpq_topk`, :func:`ivfpq_residual_topk` and
+  :func:`query_ivfpq_index`
+- a shortlist from another entry point: the exact re-rank
+  :func:`_exact_rerank` behind :func:`hamming_rerank_topk` and
+  :func:`ivfpq_rerank_topk`; :func:`mmr_topk` over
+  :func:`brute_force_topk`'s shortlist
+
+Scorers: exact cosine is :func:`_cos` over norms hoisted to one per row
+(:func:`_normed`), bit-identical to :func:`cosine`; the quantized
+surrogates are the int8 dot, the Hamming distance and the ADC lookup
+sum (:func:`_adc_dist_lut` + :func:`_adc_lut_sum`).
+
+Rankers: full-corpus crosses rank with :func:`_two_phase_topk`; every
+other per-query tail is the single window of :func:`_rank_topk`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def as_double(vec: str | Column) -> Column:
@@ -32,11 +51,35 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def _cos(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """The exact-cosine scorer: ``dot(a, b) / (na · nb)``, NULL when
+    the denominator is not positive. With ``na``/``nb`` hoisted norm
+    columns (:func:`_normed`) a pair costs one dot fold instead of
+    three; the expression tree is :func:`cosine`'s, so every double is
+    bit-identical to it."""
+    denom = na * nb
+    return F.when(denom > 0, dot(a, b) / denom)
+
+
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity; NULL when either norm is zero."""
-    d = dot(a, b)
-    denom = norm(a) * norm(b)
-    return F.when(denom > 0, d / denom)
+    return _cos(a, b, norm(a), norm(b))
+
+
+def _normed(
+    df: DataFrame, id_col: str, vec_col: str, p: str, *extra: Column
+) -> DataFrame:
+    """(id, *extra, {p}v, {p}n): the double-cast vector and its norm,
+    computed once per row so :func:`_cos` never re-folds it per pair."""
+    return df.select(
+        F.col(id_col), *extra, as_double(vec_col).alias(f"{p}v")
+    ).withColumn(f"{p}n", norm(F.col(f"{p}v")))
+
+
+def _qc_cos() -> Column:
+    """:func:`_cos` of a query × corpus pair frame built from
+    ``_normed(queries, …, "_q")`` and ``_normed(corpus, …, "_c")``."""
+    return _cos(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn"))
 
 
 def _two_phase_topk(
@@ -58,8 +101,6 @@ def _two_phase_topk(
     naive ``Window.partitionBy(query_id)`` degenerates at scale to
     |queries| reducer tasks each sorting the full corpus; this shape's
     phase-2 input is k·P rows per query."""
-    from pyspark.sql import Window
-
     pre = scored.withColumn("_pid", F.spark_partition_id())
     w1 = Window.partitionBy(query_id_col, "_pid").orderBy(*order)
     w2 = Window.partitionBy(query_id_col).orderBy(*order)
@@ -70,6 +111,61 @@ def _two_phase_topk(
         .filter(F.col("_rn") <= k)
         .select(*out_cols)
     )
+
+
+def _rank_topk(
+    scored: DataFrame,
+    k: int,
+    query_id_col: str | list[str],
+    order: list[Column],
+    out_cols: list[str | Column],
+) -> DataFrame:
+    """Single-window per-key top-k (row number ``_rn`` ≤ k under
+    ``order``) for frames already cut down to candidates — probed
+    cells, buckets, shortlists, fused or capped rows. A full-corpus
+    cross uses :func:`_two_phase_topk` instead."""
+    w = Window.partitionBy(query_id_col).orderBy(*order)
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .select(*out_cols)
+    )
+
+
+def _cos_topk(
+    scored: DataFrame, k: int, id_col: str, query_id_col: str
+) -> DataFrame:
+    """(query_id, id, cos_sim, rank) via :func:`_rank_topk`: highest
+    cosine first, NULL last, ties on the id."""
+    return _rank_topk(
+        scored,
+        k,
+        query_id_col,
+        [F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()],
+        [query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank")],
+    )
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Re-score a (query_id, id) shortlist with the exact cosine: the
+    survivors join back to their float vectors by id (never a scan)
+    and the query side is broadcast; top-k as :func:`_cos_topk`."""
+    c = _normed(embeddings, id_col, vec_col, "_c")
+    q = F.broadcast(_normed(queries, query_id_col, vec_col, "_q"))
+    scored = (
+        cand.join(c, id_col)
+        .join(q, query_id_col)
+        .select(query_id_col, id_col, _qc_cos().alias("cos_sim"))
+    )
+    return _cos_topk(scored, k, id_col, query_id_col)
 
 
 def brute_force_topk(
@@ -106,25 +202,12 @@ def brute_force_topk(
     # screen, cold 14.1 vs 16.1 s, 9.0 vs 10.7 cpu-s per pass — and it
     # crashed its Python worker on NULL or ragged vectors and non-long
     # ids. Kept the single fold deliberately.
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col), as_double(vec_col).alias("_qv")
-        ).withColumn("_qn", norm(F.col("_qv")))
-    )
-    c = embeddings.select(
-        F.col(id_col), as_double(vec_col).alias("_cv")
-    ).withColumn("_cn", norm(F.col("_cv")))
-    denom = F.col("_qn") * F.col("_cn")
+    q = F.broadcast(_normed(queries, query_id_col, vec_col, "_q"))
+    c = _normed(embeddings, id_col, vec_col, "_c")
     scored = (
         c.crossJoin(q)
         .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.when(
-                denom > 0, dot(F.col("_qv"), F.col("_cv")) / denom
-            ).alias("cos_sim"),
-        )
+        .select(query_id_col, id_col, _qc_cos().alias("cos_sim"))
     )
     return _two_phase_topk(
         scored,
@@ -189,13 +272,9 @@ def cosine_near_dup_pairs(
     exact cosine on candidates only (id_a < id_b). The all-pairs product
     never materializes — candidates are bucket-local, so the join stays
     an equi-join on the bucket key at any corpus size."""
-    c = (
-        embeddings.select(F.col(id_col), as_double(vec_col).alias("_v"))
-        .withColumn("_bucket", hyperplane_bucket(F.col("_v"), planes))
-        # one norm per vector here = one dot per PAIR below instead of
-        # three; dot/(na·nb) is the same expression tree as cosine(), so
-        # values are bit-identical
-        .withColumn("_n", norm(F.col("_v")))
+    # one norm per vector here = one dot per PAIR below instead of three
+    c = _normed(embeddings, id_col, vec_col, "_").withColumn(
+        "_bucket", hyperplane_bucket(F.col("_v"), planes)
     )
     a = c.select(
         F.col(id_col).alias("id_a"), F.col("_v").alias("_va"),
@@ -205,15 +284,11 @@ def cosine_near_dup_pairs(
         F.col(id_col).alias("id_b"), F.col("_v").alias("_vb"),
         F.col("_n").alias("_nb"), "_bucket",
     )
-    denom = F.col("_na") * F.col("_nb")
+    cos = _cos(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
     return (
         a.join(b, "_bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.when(denom > 0, dot(F.col("_va"), F.col("_vb")) / denom).alias("cos_sim"),
-        )
+        .select("id_a", "id_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
 
@@ -237,55 +312,31 @@ def ivf_topk(
     corpus pass is one scan to assign cells (persisted in practice), and
     each query touches |corpus|·(n_probe/n_cells) vectors.
     """
-    from pyspark.sql import Window
-
     cents = label_centroids(embeddings, label_col, vec_col)
-
     # corpus-side cell assignment: the zero-shuffle HOF argmax over the
     # 1-row broadcast centroid array (r7 — previously an N×cells
-    # crossJoin funneled through a per-vector row_number window).
-    # nulls_first=True mirrors `sim DESC NULLS FIRST` — the oracle's
-    # exact wording.
+    # crossJoin funneled through a per-vector row_number window), which
+    # also carries each vector's hoisted norm. nulls_first=True mirrors
+    # `sim DESC NULLS FIRST` — the oracle's exact wording.
     corpus_cells = _assign_nearest(
         embeddings.select(F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")),
         cents,
         nulls_first=True,
-    ).select(F.col("_id").alias(id_col), F.col("_v").alias("_cvec"), "cell")
-
-    # query-side top-n probe: the zero-window HOF top-n over the same
-    # broadcast centroid array (optimization r13 — previously a
-    # crossJoin + row_number window, one exchange + sort of
-    # |queries|×cells rows; _probe_cells' (is-null, sim, −cell)
-    # reverse-sort is exactly the window's `−cosine ASC, cell ASC`
-    # order, and the hoisted-norm similarity is bit-equal to cosine())
-    q = queries.select(
-        F.col(query_id_col), as_double(vec_col).alias("_qv")
+    ).select(
+        F.col("_id").alias(id_col),
+        F.col("_v").alias("_cv"),
+        F.col("_vn").alias("_cn"),
+        "cell",
     )
-    probe = (
-        _probe_cells(
-            q.select(
-                F.col(query_id_col).alias("_id"), F.col("_qv").alias("_v")
-            ),
-            cents,
-            n_probe,
-        )
-        .select(F.col("_id").alias(query_id_col), "cell")
-        .join(q, query_id_col)
+    probe = _probe(queries, cents, n_probe, query_id_col, vec_col).join(
+        _normed(queries, query_id_col, vec_col, "_q"), query_id_col
     )
-
     scored = (
         corpus_cells.join(F.broadcast(probe), "cell")
         .filter(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col, cosine(F.col("_qv"), F.col("_cvec")).alias("cos_sim"))
+        .select(query_id_col, id_col, _qc_cos().alias("cos_sim"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank"))
-    )
+    return _cos_topk(scored, k, id_col, query_id_col)
 
 
 def _assign_nearest(
@@ -322,26 +373,15 @@ def _assign_nearest(
     pair stage). The arithmetic stays ``dot / (n_v · n_c)`` with the
     identical sqrt(sequential-fold) operands, so every similarity is
     bit-equal to the unhoisted expression and the oracles don't change.
+    The vector norm rides along as ``_vn`` for callers that score the
+    vector again.
     """
-    cents_arr = F.broadcast(
-        cents.select(
-            F.col("cell"), F.col("_cv"), norm(F.col("_cv")).alias("_cn")
-        ).agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("cell"), F.col("_cv"), F.col("_cn")))
-            ).alias("_cents")
-        )
-    )
-    denom = lambda c: F.col("_vn") * c["_cn"]  # noqa: E731
-    sim = lambda c: F.when(  # noqa: E731
-        denom(c) > 0, dot(F.col("_v"), c["_cv"]) / denom(c)
-    )
     # score once per candidate (one dot fold each), THEN optionally wrap
     # with the is-null flag — keeps the expensive fold single-evaluated
     scored = F.transform(
         "_cents",
         lambda c: F.struct(
-            sim(c).alias("_sim"), (-c["cell"]).cast("long").alias("_negc")
+            _cent_sim(c).alias("_sim"), (-c["cell"]).cast("long").alias("_negc")
         ),
     )
     if nulls_first:
@@ -356,9 +396,32 @@ def _assign_nearest(
     best = F.array_max(scored)
     return (
         vecs.withColumn("_vn", norm(F.col("_v")))
-        .crossJoin(cents_arr)
-        .select(F.col("_id"), (-best["_negc"]).alias("cell"), F.col("_v"))
+        .crossJoin(_cents_row(cents))
+        .select(
+            F.col("_id"), (-best["_negc"]).alias("cell"), F.col("_v"), F.col("_vn")
+        )
     )
+
+
+def _cents_row(cents: DataFrame) -> DataFrame:
+    """The (cell, _cv) centroid table as ONE broadcast row ``_cents``:
+    the array of (cell, _cv, _cn) structs sorted by cell, each norm
+    computed once here."""
+    return F.broadcast(
+        cents.select(
+            F.col("cell"), F.col("_cv"), norm(F.col("_cv")).alias("_cn")
+        ).agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("cell"), F.col("_cv"), F.col("_cn")))
+            ).alias("_cents")
+        )
+    )
+
+
+def _cent_sim(c: Column) -> Column:
+    """:func:`_cos` of the row's ``(_v, _vn)`` against centroid struct
+    ``c`` of :func:`_cents_row`."""
+    return _cos(F.col("_v"), c["_cv"], F.col("_vn"), c["_cn"])
 
 
 def _probe_cells(
@@ -374,52 +437,44 @@ def _probe_cells(
     adds NO shuffle and no N·k row materialization at any corpus
     size — unlike the row_number-window probe shape, which exchanges
     N·k scored rows."""
-    cents_arr = F.broadcast(
-        cents.select(
-            F.col("cell"), F.col("_cv"), norm(F.col("_cv")).alias("_cn")
-        ).agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("cell"), F.col("_cv"), F.col("_cn")))
-            ).alias("_cents")
-        )
-    )
-    denom = lambda c: F.col("_vn") * c["_cn"]  # noqa: E731
-    sim = lambda c: F.when(  # noqa: E731
-        denom(c) > 0, dot(F.col("_v"), c["_cv"]) / denom(c)
-    )
     scored = F.transform(
         "_cents",
         lambda c: F.struct(
-            sim(c).isNull().cast("int").alias("_nf"),
-            sim(c).alias("_sim"),
+            _cent_sim(c).isNull().cast("int").alias("_nf"),
+            _cent_sim(c).alias("_sim"),
             (-c["cell"]).cast("long").alias("_negc"),
         ),
     )
     top = F.slice(F.reverse(F.array_sort(scored)), 1, n_probe)
     return (
         vecs.withColumn("_vn", norm(F.col("_v")))
-        .crossJoin(cents_arr)
+        .crossJoin(_cents_row(cents))
         .select(F.col("_id"), F.explode(top).alias("_p"))
         .select(F.col("_id"), (-F.col("_p")["_negc"]).alias("cell"))
     )
 
 
-def _adc_dot(qvec: Column, m: int, sub: int) -> Column:
-    """ADC inner product ⟨q, ĉ⟩ of a float query vector against a PQ
-    code row (columns ``code_0..code_{m-1}``) under the broadcast
-    ``_cb`` codebooks: per subspace the exact dot of the query
-    subvector with the ASSIGNED codeword, summed in fixed subspace
-    order — the MIPS form of :func:`_adc_distance` (on unit vectors
-    ⟨q, ĉ⟩ estimates the cosine directly, so a similarity threshold
-    applies to it without the ‖ĉ‖² correction term)."""
-    out = None
-    for s in range(m):
-        sel = F.element_at(
-            F.element_at("_cb", s + 1), F.col(f"code_{s}") + 1
-        )
-        term = dot(F.slice(qvec, s * sub + 1, sub), sel)
-        out = term if out is None else out + term
-    return out
+def _probe(
+    queries: DataFrame,
+    cents: DataFrame,
+    n_probe: int,
+    query_id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, cell): the query-side probe generator of every IVF
+    path — the ``n_probe`` most-cosine-similar cells of each raw query
+    vector via :func:`_probe_cells`' zero-window HOF top-n
+    (optimization r13 — previously a crossJoin + row_number window, one
+    exchange + sort of |queries|×cells rows; the reverse-sorted
+    (is-null, sim, −cell) structs are exactly that window's `−cosine
+    ASC, cell ASC` order with bit-equal similarities)."""
+    return _probe_cells(
+        queries.select(
+            F.col(query_id_col).alias("_id"), as_double(vec_col).alias("_v")
+        ),
+        cents,
+        n_probe,
+    ).select(F.col("_id").alias(query_id_col), "cell")
 
 
 def ann_join(
@@ -454,8 +509,9 @@ def ann_join(
        cell key. A pair is a candidate if EITHER endpoint probes the
        other's residence cell.
     4. ADC prefilter — candidates are screened against the PQ CODES of
-       the residence side (:func:`_adc_dot` — the corpus side is read
-       as m small ints, never floats), keeping pairs with approximate
+       the residence side (the :func:`_adc_dot_lut` +
+       :func:`_adc_lut_sum` pair — the corpus side is read as m small
+       ints, never floats), keeping pairs with approximate
        cosine ≥ threshold − ``margin`` (safe-side slack for the
        quantization error; bigger margin = more exact work, higher
        recall).
@@ -517,9 +573,9 @@ def ann_join(
     )
     # ADC LUT hoisted to ONE row per query (optimization r12, measured:
     # the screen stage was 24 s executor CPU at sf0.1 — §1.2 per-task
-    # work): lut[s][j] = ⟨q_subvec_s, codeword_{s,j}⟩, the exact same
-    # dot() fold _adc_dot evaluated inline, computed once per QUERY
-    # (m·k_codes dots) instead of once per CANDIDATE (~300× more).
+    # work): lut[s][j] = ⟨q_subvec_s, codeword_{s,j}⟩, the same dot()
+    # fold the per-candidate screen evaluated inline, computed once per
+    # QUERY (m·k_codes dots) instead of once per CANDIDATE (~300× more).
     # The screen becomes m LUT lookups summed in the same fixed
     # subspace order, so every double — and the margin compare — is
     # bit-identical; the oracle doesn't move.
@@ -681,33 +737,18 @@ def lsh_topk(
     """Approximate top-k: only candidates in the query's hyperplane
     bucket are scored. Recall grows with fewer planes / multiple tables;
     this single-table variant is the scale skeleton."""
-    from pyspark.sql import Window
-
-    c = embeddings.select(
-        F.col(id_col),
-        as_double(vec_col).alias("_cv"),
-    ).withColumn("_bucket", hyperplane_bucket(F.col("_cv"), planes))
-    q = queries.select(
-        F.col(query_id_col),
-        as_double(vec_col).alias("_qv"),
-    ).withColumn("_bucket", hyperplane_bucket(F.col("_qv"), planes))
+    c = _normed(embeddings, id_col, vec_col, "_c").withColumn(
+        "_bucket", hyperplane_bucket(F.col("_cv"), planes)
+    )
+    q = _normed(queries, query_id_col, vec_col, "_q").withColumn(
+        "_bucket", hyperplane_bucket(F.col("_qv"), planes)
+    )
     scored = (
         c.join(F.broadcast(q), "_bucket")
         .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"),
-        )
+        .select(query_id_col, id_col, _qc_cos().alias("cos_sim"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank"))
-    )
+    return _cos_topk(scored, k, id_col, query_id_col)
 
 
 def pca_power_step(
@@ -962,9 +1003,7 @@ def hamming_rerank_topk(
     id — never a scan; everything upstream is xor + popcount over the
     signature column. Output matches :func:`brute_force_topk`'s shape:
     (query_id, id, cos_sim, rank); the re-rank window sees only the
-    tiny shortlist."""
-    from pyspark.sql import Window
-
+    tiny shortlist (:func:`_exact_rerank`)."""
     cand = hamming_topk(
         embeddings,
         queries,
@@ -974,24 +1013,8 @@ def hamming_rerank_topk(
         vec_col=vec_col,
         query_id_col=query_id_col,
     ).select(query_id_col, id_col)
-    c = embeddings.select(F.col(id_col), as_double(vec_col).alias("_cv"))
-    q = F.broadcast(
-        queries.select(F.col(query_id_col), as_double(vec_col).alias("_qv"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        cand.join(c, id_col)
-        .join(q, query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank"))
+    return _exact_rerank(
+        cand, embeddings, queries, k, id_col, vec_col, query_id_col
     )
 
 
@@ -1051,14 +1074,12 @@ def semdedup_prune(
             cents,
             nulls_first=True,
         )
-        # norm computed ONCE per vector here; the pair step below then
-        # costs one dot product per pair instead of three (dot + both
-        # norms) — measured 3× on the intra-cell comparison stage. The
-        # arithmetic stays dot/(na·nb), identical to the oracle's
-        # expression tree, so values are bit-equal.
-        .select(
-            F.col("_id").alias(id_col), "cell", "_v", norm(F.col("_v")).alias("_n")
-        )
+        # the assignment's norm (once per vector) rides along; the pair
+        # step below then costs one dot product per pair instead of
+        # three (dot + both norms) — measured 3× on the intra-cell
+        # comparison stage. The arithmetic stays dot/(na·nb), identical
+        # to the oracle's expression tree, so values are bit-equal.
+        .select(F.col("_id").alias(id_col), "cell", "_v", F.col("_vn").alias("_n"))
         # The assignment subtree has THREE consumers below — both
         # self-join branches and the final join-back — and Spark
         # re-executes a subtree per consumer. Pin it so assignment
@@ -1088,8 +1109,7 @@ def semdedup_prune(
         F.col("_v").alias("_vb"),
         F.col("_n").alias("_nb"),
     )
-    denom = F.col("_na") * F.col("_nb")
-    pair_cos = F.when(denom > 0, dot(F.col("_va"), F.col("_vb")) / denom)
+    pair_cos = _cos(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
     dup = (
         a.join(b, "cell")
         .filter(F.col("_ida") < F.col("_idb"))
@@ -1306,15 +1326,25 @@ def pq_codebooks(
     :func:`kmeans_centroids`-style rounds; the seeds keep the
     cross-engine contract exact."""
     base = embeddings.select(
-        F.col(id_col).alias("_id"), unit(as_double(vec_col)).alias("_nv")
+        F.col(id_col), unit(as_double(vec_col)).alias("_nv")
     )
+    return _seed_codebooks(base, id_col, m, k, "pq_codebooks")
+
+
+def _seed_codebooks(
+    nv: DataFrame, id_col: str, m: int, k: int, who: str
+) -> list[list[list[float]]]:
+    """Split the ``_nv`` vectors of the rows with id < k (a bounded
+    k·dim driver fetch, in id order) into m subspace codebooks of k
+    codewords each; fewer than k such rows raises instead of silently
+    shrinking the codebook."""
     seeds = sorted(
-        (int(r._id), [float(x) for x in r._nv])
-        for r in base.filter(F.col("_id") < k).collect()
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in nv.filter(F.col(id_col) < k).select(id_col, "_nv").collect()
     )
     if len(seeds) < k:
         raise ValueError(
-            f"pq_codebooks needs {k} seed vectors with {id_col} < {k}, "
+            f"{who} needs {k} seed vectors with {id_col} < {k}, "
             f"found {len(seeds)} — non-contiguous ids would silently "
             f"shrink the codebook"
         )
@@ -1446,40 +1476,19 @@ def _codebook_frame(spark, codebooks: list[list[list[float]]]) -> DataFrame:
     return F.broadcast(spark.createDataFrame([(data,)], schema))
 
 
-def _adc_distance(qvec: Column, m: int, sub: int) -> Column:
-    """The m-term ADC distance of query vector ``qvec`` against a code
-    row (columns ``code_0..code_{m-1}``) under the broadcast ``_cb``
-    codebook column: per subspace, the exact ``_pq_dist`` of the
-    query's subvector to the ASSIGNED codeword, summed in fixed
-    subspace order 0..m-1 so both engines fold identically. One
-    ``element_at`` chain per subspace against broadcast DATA — no
-    literals, O(1) plan size in the quantizer configuration.
-
-    Hot scans should prefer the hoisted LUT pair
-    (:func:`_adc_dist_lut` on the per-query side +
-    :func:`_adc_lut_sum` in the scan) — identical doubles, ~sub×
-    less per-candidate arithmetic."""
-    dist = None
-    for s in range(m):
-        sel = F.element_at(
-            F.element_at("_cb", s + 1), F.col(f"code_{s}") + 1
-        )
-        term = _pq_dist(F.slice(qvec, s * sub + 1, sub), sel)
-        dist = term if dist is None else dist + term
-    return dist
-
-
 def _adc_dist_lut(qvec: Column, sub: int) -> Column:
     """The classic ADC lookup table (Jégou et al. 2011), hoisted to the
-    QUERY side: ``lut[s][j] = _pq_dist(q_subvec_s, codeword_{s,j})`` —
-    the exact same two-term expression :func:`_adc_distance` evaluated
-    inline per CANDIDATE, now computed once per query/probe row
-    (m·k_codes folds) so the per-candidate scan cost drops from
-    m·O(sub) interpreted-lambda arithmetic to m array lookups
-    (optimization r12, guide §1.2 per-task work). Values are the
-    identical doubles, so distances, ranks, and ties are unchanged and
-    the SQL oracles don't move. Must be projected with the broadcast
-    ``_cb`` column in scope; pair with :func:`_adc_lut_sum`."""
+    QUERY side: ``lut[s][j] = _pq_dist(q_subvec_s, codeword_{s,j})``,
+    the two-term subspace distance to every codeword of the broadcast
+    ``_cb`` codebooks (:func:`_codebook_frame`), computed once per
+    query/probe row (m·k_codes folds). :func:`_adc_lut_sum` then reads
+    the m-term ADC distance of a code row (columns
+    ``code_0..code_{m-1}``) as m array lookups summed in fixed subspace
+    order 0..m-1 — per candidate, m lookups instead of m·O(sub)
+    interpreted-lambda arithmetic (optimization r12, guide §1.2
+    per-task work), with the identical doubles an inline per-candidate
+    fold gives, so distances, ranks and ties match the SQL oracles.
+    Must be projected with the broadcast ``_cb`` column in scope."""
     return F.transform(
         F.col("_cb"),
         lambda scb, s: F.transform(
@@ -1490,14 +1499,14 @@ def _adc_dist_lut(qvec: Column, sub: int) -> Column:
 
 def _adc_dot_lut(qvec: Column, sub: int) -> Column:
     """MIPS-form twin of :func:`_adc_dist_lut`: ``lut[s][j] =
-    dot(q_subvec_s, codeword_{s,j})`` — the exact inner-product term
-    :func:`_adc_dot` evaluates inline per candidate, hoisted once per
-    query row (r12 advice: ann_join used to hand-inline this as an
-    F.expr SQL string next to the Column-API distance twin; one
-    builder now serves both forms). Values are the identical doubles
-    (same zip_with/aggregate fold, same 0.0 seed), so screens and the
-    oracles don't move. Project with the broadcast ``_cb`` column in
-    scope; pair with :func:`_adc_lut_sum`."""
+    dot(q_subvec_s, codeword_{s,j})``, hoisted once per query row; with
+    :func:`_adc_lut_sum` it gives the ADC inner product ⟨q, ĉ⟩ of a
+    code row, summed in fixed subspace order (on unit vectors ⟨q, ĉ⟩
+    estimates the cosine directly, so a similarity threshold applies to
+    it without the ‖ĉ‖² correction term). Values are the doubles of the
+    same zip_with/aggregate fold with the same 0.0 seed, so screens and
+    the oracles match. Project with the broadcast ``_cb`` column in
+    scope."""
     return F.transform(
         F.col("_cb"),
         lambda scb, s: F.transform(
@@ -1507,8 +1516,8 @@ def _adc_dot_lut(qvec: Column, sub: int) -> Column:
 
 
 def _adc_lut_sum(m: int) -> Column:
-    """Scan-side pair of :func:`_adc_dist_lut`: Σ_s lut[s][code_s] in
-    the same fixed subspace order 0..m-1 (bit-identical fold)."""
+    """Scan-side pair of :func:`_adc_dist_lut` / :func:`_adc_dot_lut`:
+    Σ_s lut[s][code_s] in fixed subspace order 0..m-1."""
     out = None
     for s in range(m):
         term = F.element_at(
@@ -1676,68 +1685,16 @@ def ivfpq_topk(
     (post-filter hits ⊆ pre-filter hits, provably).
     At scale the predicate reaches the scan as an ordinary pushed
     filter on the codes table's metadata columns."""
-    from pyspark.sql import Window
-
-    cents = label_centroids(embeddings, label_col, vec_col)
-    cbs = pq_codebooks(embeddings, m, k_codes, id_col, vec_col)
-    sub = len(cbs[0][0])
-    scan_src = (
-        embeddings.filter(corpus_predicate)
-        if corpus_predicate is not None
-        else embeddings
-    )
-
-    # corpus-side cell assignment: zero-shuffle HOF argmax (r7); see
-    # ivf_topk — nulls_first mirrors the oracle's DESC NULLS FIRST
-    corpus_cells = _assign_nearest(
-        scan_src.select(F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")),
-        cents,
-        nulls_first=True,
-    ).select(F.col("_id").alias(id_col), "cell")
-    qn = unit_norm_frame(queries, query_id_col, vec_col, "_qn")
-    q = queries.select(
-        F.col(query_id_col), as_double(vec_col).alias("_qv")
-    ).join(qn, query_id_col)
-    # query-side top-n_probe via the zero-window HOF top-n over the
-    # broadcast centroid array (optimization r13 — replaces the
-    # crossJoin + row_number window; _probe_cells' reverse-sorted
-    # (is-null, sim, −cell) structs ARE the window's `−cosine ASC,
-    # cell ASC` order with bit-equal similarities)
-    probes = (
-        _probe_cells(
-            q.select(
-                F.col(query_id_col).alias("_id"), F.col("_qv").alias("_v")
-            ),
-            cents,
-            n_probe,
-        )
-        .select(F.col("_id").alias(query_id_col), "cell")
-        .join(qn, query_id_col)
-        .select(query_id_col, "cell", "_qn")
-        # ADC LUT hoisted per probe row (see _adc_dist_lut): the cell
-        # scan pays m lookups per code row — identical doubles
-        .crossJoin(_codebook_frame(embeddings.sparkSession, cbs))
-        .select(
-            query_id_col,
-            "cell",
-            _adc_dist_lut(F.col("_qn"), sub).alias("_lut"),
-        )
-    )
-    codes = pq_encode(scan_src, cbs, id_col, vec_col)
-    scan = (
-        codes.join(corpus_cells, id_col)
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-    )
-    dist = _adc_lut_sum(m)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scan.select(query_id_col, id_col, dist.alias("pq_dist"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "pq_dist", F.col("_rn").alias("rank"))
+    return query_ivfpq_index(
+        _ivfpq_index(
+            embeddings, m, k_codes, id_col, vec_col, label_col, corpus_predicate
+        ),
+        queries,
+        k,
+        n_probe,
+        id_col,
+        vec_col,
+        query_id_col,
     )
 
 
@@ -1776,22 +1733,14 @@ def ivfpq_residual_topk(
     table, not a shuffle), ADC over codes in n_probe/n_cells of the
     corpus.
     """
-    from pyspark.sql import Window
-
     cents = label_centroids(embeddings, label_col, vec_col)
     # unit-normalized centroids — the residual reference frame (tiny,
     # broadcast everywhere)
     cn = cents.select("cell", unit(F.col("_cv")).alias("_cn"))
-    corpus_cells = _assign_nearest(
-        embeddings.select(
-            F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")
-        ),
-        cents,
-        nulls_first=True,
-    ).select(F.col("_id").alias(id_col), "cell")
-    nvf = unit_norm_frame(embeddings, id_col, vec_col)
+    corpus_cells = assign_cells(embeddings, cents, id_col, vec_col)
     resid = (
-        nvf.join(corpus_cells, id_col)
+        unit_norm_frame(embeddings, id_col, vec_col)
+        .join(corpus_cells, id_col)
         .join(F.broadcast(cn), "cell")
         .select(
             F.col(id_col),
@@ -1800,74 +1749,20 @@ def ivfpq_residual_topk(
         )
     )
     # residual seed codebooks: the id<k_codes convention on the
-    # RESIDUAL frame (bounded k·dim driver fetch)
-    seeds = sorted(
-        (int(getattr(r, id_col)), [float(x) for x in r._nv])
-        for r in resid.filter(F.col(id_col) < k_codes).collect()
+    # RESIDUAL frame
+    rcbs = _seed_codebooks(resid, id_col, m, k_codes, "ivfpq_residual_topk")
+    postings = _pq_encode_nv(resid.select(id_col, "_nv"), rcbs, id_col).join(
+        corpus_cells, id_col
     )
-    if len(seeds) < k_codes:
-        raise ValueError(
-            f"ivfpq_residual_topk needs {k_codes} seed vectors with "
-            f"{id_col} < {k_codes}, found {len(seeds)}"
-        )
-    dim = len(seeds[0][1])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    sub = dim // m
-    rcbs = [
-        [v[s * sub : (s + 1) * sub] for _, v in seeds] for s in range(m)
-    ]
-
-    codes = _pq_encode_nv(resid.select(id_col, "_nv"), rcbs, id_col)
-    # query-side probing: same raw-vector cosine rule as ivfpq_topk,
-    # then per probed cell the query residual qr = qn − cn(cell)
-    qn = unit_norm_frame(queries, query_id_col, vec_col, "_qn")
-    q = queries.select(
-        F.col(query_id_col), as_double(vec_col).alias("_qv")
-    ).join(qn, query_id_col)
-    # zero-window HOF top-n_probe (optimization r13; see ivfpq_topk)
-    probes = (
-        _probe_cells(
-            q.select(
-                F.col(query_id_col).alias("_id"), F.col("_qv").alias("_v")
-            ),
-            cents,
-            n_probe,
-        )
-        .select(F.col("_id").alias(query_id_col), "cell")
-        .join(qn, query_id_col)
-        .select(query_id_col, "cell", "_qn")
-        .join(cn, "cell")
-        .select(
-            query_id_col,
-            "cell",
-            F.zip_with("_qn", "_cn", lambda x, y: x - y).alias("_qr"),
-        )
-        # residual ADC LUT + the ‖qr‖² term, both hoisted per probe
-        # row (see _adc_dist_lut) — the cell scan pays m lookups and
-        # one add per code row; identical doubles
-        .crossJoin(_codebook_frame(embeddings.sparkSession, rcbs))
-        .select(
-            query_id_col,
-            "cell",
-            _adc_dist_lut(F.col("_qr"), sub).alias("_lut"),
-            dot(F.col("_qr"), F.col("_qr")).alias("_qrr"),
-        )
-    )
-    scan = (
-        codes.join(corpus_cells, id_col)
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-    )
-    dist = F.col("_qrr") + _adc_lut_sum(m)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scan.select(query_id_col, id_col, dist.alias("pq_dist"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "pq_dist", F.col("_rn").alias("rank"))
+    return _ivfpq_serve(
+        {"centroids": cents, "codebooks": rcbs, "postings": postings},
+        queries,
+        k,
+        n_probe,
+        id_col,
+        vec_col,
+        query_id_col,
+        resid_cn=cn,
     )
 
 
@@ -1892,42 +1787,31 @@ def diversified_topk(
     iteration), so the SQL oracle is two stacked ranking windows. At
     scale the group stage runs on (query, group) partitions and the
     final stage sees ≤ |groups|·per_group rows per query."""
-    from pyspark.sql import Window
-
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col), as_double(vec_col).alias("_qv")
-        )
-    )
-    c = embeddings.select(
-        F.col(id_col), F.col(group_col).alias("_grp"),
-        as_double(vec_col).alias("_cv"),
+    q = F.broadcast(_normed(queries, query_id_col, vec_col, "_q"))
+    c = _normed(
+        embeddings, id_col, vec_col, "_c", F.col(group_col).alias("_grp")
     )
     scored = (
         c.crossJoin(q)
         .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            "_grp",
-            cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"),
-        )
+        .select(query_id_col, id_col, "_grp", _qc_cos().alias("cos_sim"))
     )
     order = [F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()]
-    wg = Window.partitionBy(query_id_col, "_grp").orderBy(*order)
-    w = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        scored.withColumn("_rg", F.row_number().over(wg))
-        .filter(F.col("_rg") <= per_group)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
+    capped = _rank_topk(
+        scored, per_group, [query_id_col, "_grp"], order, scored.columns
+    )
+    return _rank_topk(
+        capped,
+        k,
+        query_id_col,
+        order,
+        [
             query_id_col,
             id_col,
             F.col("_grp").alias(group_col),
             "cos_sim",
             F.col("_rn").alias("rank"),
-        )
+        ],
     )
 
 
@@ -1973,36 +1857,43 @@ def mmr_topk(
         .select(query_id_col, id_col, F.col("cos_sim").alias("_rel"))
         .localCheckpoint(eager=True)
     )
-    v = embeddings.select(F.col(id_col), as_double(vec_col).alias("_v"))
-    ca = cand.select(
-        F.col(query_id_col), F.col(id_col).alias("_a")
-    ).join(v.select(F.col(id_col).alias("_a"), F.col("_v").alias("_va")), "_a")
-    cb = cand.select(
-        F.col(query_id_col), F.col(id_col).alias("_b")
-    ).join(v.select(F.col(id_col).alias("_b"), F.col("_v").alias("_vb")), "_b")
+    v = _normed(embeddings, id_col, vec_col, "_")
+
+    def side(x):
+        return cand.select(
+            F.col(query_id_col), F.col(id_col).alias(f"_{x}")
+        ).join(
+            v.select(
+                F.col(id_col).alias(f"_{x}"),
+                F.col("_v").alias(f"_v{x}"),
+                F.col("_n").alias(f"_n{x}"),
+            ),
+            f"_{x}",
+        )
+
     pairs = (
-        ca.join(cb, query_id_col)
+        side("a")
+        .join(side("b"), query_id_col)
         .filter(F.col("_a") != F.col("_b"))
         .select(
             query_id_col,
             "_a",
             "_b",
-            cosine(F.col("_va"), F.col("_vb")).alias("_sim"),
+            _cos(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")).alias(
+                "_sim"
+            ),
         )
         .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Window
-
     order = [F.col("_score").desc_nulls_last(), F.col(id_col).asc()]
-    w = Window.partitionBy(query_id_col).orderBy(*order)
-    sel = (
-        cand.withColumn("_score", F.lit(lam) * F.col("_rel"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            query_id_col, id_col, "_score", F.lit(1).alias("rank")
+
+    def best(scored, rank):
+        return _rank_topk(
+            scored, 1, query_id_col, order,
+            [query_id_col, id_col, "_score", F.lit(rank).alias("rank")],
         )
-    )
+
+    sel = best(cand.withColumn("_score", F.lit(lam) * F.col("_rel")), 1)
     for step in range(2, k + 1):
         # every frame renamed to globally-unique column names before
         # joining, so no join needs dataset-qualified references
@@ -2036,17 +1927,13 @@ def mmr_topk(
                 "_msim",
             )
         )
-        pick = (
+        pick = best(
             mx.withColumn(
                 "_score",
                 F.lit(lam) * F.col("_rel")
                 - F.lit(1.0 - lam) * F.col("_msim"),
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                query_id_col, id_col, "_score", F.lit(step).alias("rank")
-            )
+            ),
+            step,
         )
         # pin the (≤ step·|queries|-row) selected set: keeps each
         # step's plan flat AND severs the pairs lineage so the next
@@ -2091,29 +1978,43 @@ def build_ivfpq_index(
     :func:`load_ivfpq_index` + :func:`query_ivfpq_index`, whose
     results are row-identical to :func:`ivfpq_topk` on the same
     corpus (pytest-pinned)."""
-    spark = embeddings.sparkSession
-    cents = label_centroids(embeddings, label_col, vec_col)
-    cbs = pq_codebooks(embeddings, m, k_codes, id_col, vec_col)
-    cells = _assign_nearest(
-        embeddings.select(
-            F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")
-        ),
-        cents,
-        nulls_first=True,
-    ).select(F.col("_id").alias(id_col), "cell")
-    codes = pq_encode(embeddings, cbs, id_col, vec_col)
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
+    index = _ivfpq_index(embeddings, m, k_codes, id_col, vec_col, label_col)
+    index["centroids"].write.mode("overwrite").parquet(f"{path}/centroids")
+    embeddings.sparkSession.createDataFrame(
         [
             (s, j, cw)
-            for s, sub in enumerate(cbs)
+            for s, sub in enumerate(index["codebooks"])
             for j, cw in enumerate(sub)
         ],
         "s int, j int, codeword array<double>",
     ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    codes.join(cells, id_col).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{path}/postings")
+    index["postings"].write.mode("overwrite").partitionBy("cell").parquet(
+        f"{path}/postings"
+    )
+
+
+def _ivfpq_index(
+    embeddings: DataFrame,
+    m: int,
+    k_codes: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    corpus_predicate: Column | None = None,
+) -> dict:
+    """The IVF-PQ index as the in-memory dict :func:`load_ivfpq_index`
+    returns: per-``label`` centroids and id<k seed codebooks, both
+    trained on the FULL corpus, and postings (id, code_0..code_{m-1},
+    cell) of the corpus rows matching ``corpus_predicate`` (all rows
+    when it is None) — the filter runs before the postings are
+    built."""
+    src = embeddings if corpus_predicate is None else embeddings.filter(corpus_predicate)
+    cents = label_centroids(embeddings, label_col, vec_col)
+    cbs = pq_codebooks(embeddings, m, k_codes, id_col, vec_col)
+    postings = pq_encode(src, cbs, id_col, vec_col).join(
+        assign_cells(src, cents, id_col, vec_col), id_col
+    )
+    return {"centroids": cents, "codebooks": cbs, "postings": postings}
 
 
 def load_ivfpq_index(spark, path: str) -> dict:
@@ -2153,52 +2054,64 @@ def query_ivfpq_index(
     bytes per vector in n_probe/n_cells of the corpus, exactly the
     ivfpq_topk dataflow minus every build-time step. Results are
     row-identical to :func:`ivfpq_topk` on the same corpus."""
-    from pyspark.sql import Window
+    return _ivfpq_serve(
+        index, queries, k, n_probe, id_col, vec_col, query_id_col
+    )
 
-    cents = index["centroids"]
+
+def _ivfpq_serve(
+    index: dict,
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    resid_cn: DataFrame | None = None,
+) -> DataFrame:
+    """The one IVF-PQ serve body, probe → scan → rank, over an index
+    dict (:func:`_ivfpq_index` / :func:`load_ivfpq_index`): each query
+    probes its n_probe nearest cells (:func:`_probe`, raw-vector
+    cosine), each probe row carries the query's ADC LUT
+    (:func:`_adc_dist_lut`, hoisted so the cell scan pays m lookups per
+    code row), the probed cells equi-join the postings on ``cell``, and
+    the per-query top-k is :func:`_rank_topk` over ``pq_dist`` ASC,
+    ties on the id.
+
+    With ``resid_cn`` (cell, _cn) the postings hold RESIDUAL codes
+    (:func:`ivfpq_residual_topk`): each probe row's query vector
+    becomes qr = qn − cn(cell), and the distance adds the ‖qr‖² term,
+    which is not constant across probed cells."""
     cbs = index["codebooks"]
     m = len(cbs)
     sub = len(cbs[0][0])
-    spark = queries.sparkSession
-    qn = unit_norm_frame(queries, query_id_col, vec_col, "_qn")
-    q = queries.select(
-        F.col(query_id_col), as_double(vec_col).alias("_qv")
-    ).join(qn, query_id_col)
-    # zero-window HOF top-n_probe (optimization r13; see ivfpq_topk —
-    # keeps the serve path row-identical to it)
-    probes = (
-        _probe_cells(
-            q.select(
-                F.col(query_id_col).alias("_id"), F.col("_qv").alias("_v")
-            ),
-            cents,
-            n_probe,
-        )
-        .select(F.col("_id").alias(query_id_col), "cell")
-        .join(qn, query_id_col)
-        .select(query_id_col, "cell", "_qn")
-        # ADC LUT hoisted per probe row (see _adc_dist_lut)
-        .crossJoin(_codebook_frame(spark, cbs))
-        .select(
+    probes = _probe(
+        queries, index["centroids"], n_probe, query_id_col, vec_col
+    ).join(unit_norm_frame(queries, query_id_col, vec_col, "_qn"), query_id_col)
+    qrr = []
+    dist = _adc_lut_sum(m)
+    if resid_cn is not None:
+        probes = probes.join(resid_cn, "cell").select(
             query_id_col,
             "cell",
-            _adc_dist_lut(F.col("_qn"), sub).alias("_lut"),
+            F.zip_with("_qn", "_cn", lambda x, y: x - y).alias("_qn"),
         )
+        qrr = [dot(F.col("_qn"), F.col("_qn")).alias("_qrr")]
+        dist = F.col("_qrr") + dist
+    lut = probes.crossJoin(_codebook_frame(queries.sparkSession, cbs)).select(
+        query_id_col, "cell", _adc_dist_lut(F.col("_qn"), sub).alias("_lut"), *qrr
     )
     scan = (
         index["postings"]
-        .join(F.broadcast(probes), "cell")
+        .join(F.broadcast(lut), "cell")
         .filter(F.col(id_col) != F.col(query_id_col))
     )
-    dist = _adc_lut_sum(m)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scan.select(query_id_col, id_col, dist.alias("pq_dist"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "pq_dist", F.col("_rn").alias("rank"))
+    return _rank_topk(
+        scan.select(query_id_col, id_col, dist.alias("pq_dist")),
+        k,
+        query_id_col,
+        [F.col("pq_dist").asc(), F.col(id_col).asc()],
+        [query_id_col, id_col, "pq_dist", F.col("_rn").alias("rank")],
     )
 
 
@@ -2256,8 +2169,6 @@ def hierarchical_assign(
     over that broadcast DATA: zero shuffle, O(1) plan size in k,
     NULL-similarity outranks values (the DESC NULLS FIRST flavor,
     matching assign_cells' default). Returns (id, cell)."""
-    from pyspark.sql import Window
-
     # super-seeds: the n_super smallest cell ids (tiny frame — the
     # single-partition window only ever sees ≤ k centroid rows)
     w = Window.orderBy("cell")
@@ -2325,22 +2236,17 @@ def hierarchical_assign(
         ).agg(F.array_sort(F.collect_list("_s")).alias("_supers"))
     )
 
-    def _sim(vec, vn, cvec, cn):
-        return F.when(vn * cn > 0, dot(vec, cvec) / (vn * cn))
-
     # level 1: argmax over supers — the winner's children ride along
     # in the struct (compared only on the impossible total tie, since
     # super ids are unique)
     scored1 = F.transform(
         "_supers",
         lambda s: F.struct(
-            _sim(F.col("_v"), F.col("_vn"), s["_scv"], s["_sn"])
+            _cos(F.col("_v"), s["_scv"], F.col("_vn"), s["_sn"])
             .isNull()
             .cast("int")
             .alias("_nf"),
-            _sim(F.col("_v"), F.col("_vn"), s["_scv"], s["_sn"]).alias(
-                "_sim"
-            ),
+            _cos(F.col("_v"), s["_scv"], F.col("_vn"), s["_sn"]).alias("_sim"),
             (-s["scell"]).cast("long").alias("_negs"),
             s["_children"].alias("_ch"),
         ),
@@ -2350,13 +2256,8 @@ def hierarchical_assign(
     scored2 = F.transform(
         best1["_ch"],
         lambda c: F.struct(
-            _sim(F.col("_v"), F.col("_vn"), c["_cv"], c["_cn"])
-            .isNull()
-            .cast("int")
-            .alias("_nf"),
-            _sim(F.col("_v"), F.col("_vn"), c["_cv"], c["_cn"]).alias(
-                "_sim"
-            ),
+            _cent_sim(c).isNull().cast("int").alias("_nf"),
+            _cent_sim(c).alias("_sim"),
             (-c["cell"]).cast("long").alias("_negc"),
         ),
     )
@@ -2393,8 +2294,6 @@ def rrf_fuse(
     default). Ties break on the candidate id. Output: (query_id, id,
     rrf_score rounded to 6, rank 1..k).
     """
-    from pyspark.sql import Window
-
     from covid_custom_sql_engine_spark.operators.core import dsum
 
     if not rankings:
@@ -2411,18 +2310,17 @@ def rrf_fuse(
     for pr in parts[1:]:
         allr = allr.unionByName(pr)
     fused = allr.groupBy(query_id_col, id_col).agg(dsum(F.col("_t")).alias("_s"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_s").desc(), F.col(id_col).asc()
-    )
-    return (
-        fused.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
+    return _rank_topk(
+        fused,
+        k,
+        query_id_col,
+        [F.col("_s").desc(), F.col(id_col).asc()],
+        [
             query_id_col,
             id_col,
             (F.round("_s", 6) + 0.0).alias("rrf_score"),
             F.col("_rn").cast("bigint").alias("rank"),
-        )
+        ],
     )
 
 
@@ -2449,10 +2347,9 @@ def ivfpq_rerank_topk(
     scan); everything upstream reads m code bytes per vector in
     n_probe/n_cells of the corpus. Output matches
     :func:`brute_force_topk`'s shape: (query_id, id, cos_sim, rank),
-    ties on the neighbor id, NULLS LAST like the exact baseline.
+    ties on the neighbor id, NULLS LAST like the exact baseline
+    (:func:`_exact_rerank`).
     """
-    from pyspark.sql import Window
-
     cand = ivfpq_topk(
         embeddings,
         queries,
@@ -2465,24 +2362,8 @@ def ivfpq_rerank_topk(
         query_id_col=query_id_col,
         label_col=label_col,
     ).select(query_id_col, id_col)
-    c = embeddings.select(F.col(id_col), as_double(vec_col).alias("_cv"))
-    q = F.broadcast(
-        queries.select(F.col(query_id_col), as_double(vec_col).alias("_qv"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        cand.join(c, id_col)
-        .join(q, query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank"))
+    return _exact_rerank(
+        cand, embeddings, queries, k, id_col, vec_col, query_id_col
     )
 
 

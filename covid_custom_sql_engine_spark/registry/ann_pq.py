@@ -1676,8 +1676,9 @@ _AJ_CUT = _AJ_TAU - _AJ_MARGIN
 
 
 def _adc_dot_terms_sql(m: int, sub: int) -> str:
-    """SQL twin of similarity._adc_dot: ⟨q, ĉ⟩ summed in fixed
-    subspace order (left-assoc +, the engine fold order)."""
+    """SQL twin of the ADC inner product that similarity._adc_dot_lut
+    + similarity._adc_lut_sum read off the per-query LUT: ⟨q, ĉ⟩ summed
+    in fixed subspace order (left-assoc +, the engine fold order)."""
     return " + ".join(
         f"list_dot_product(list_slice(q.v, {s * sub + 1}, {(s + 1) * sub}), b{s}.c)"
         for s in range(m)

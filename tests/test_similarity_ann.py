@@ -284,27 +284,77 @@ def test_assign_cells_frozen_centroids(spark):
     ) == [("a", 0), ("b", 1)]
 
 
-@pytest.mark.parametrize("dirty", [None, [0.3]], ids=["null", "ragged"])
-def test_brute_force_topk_dirty_corpus_vector(spark, dirty):
-    """A NULL or ragged corpus vector scores NULL and ranks last."""
+_PLANE = [[1.0, 0.0, 0.0, 0.0]]
+# Every re-scored top-k path, run wide enough (k, probes, shortlist and
+# group cap cover the whole 48-row corpus) that the dirty vector is
+# always a candidate. The LSH and signature planes split the two
+# queries: a NULL or ragged vector signs as all-0 bits (query 1001's
+# bucket), the all-zero vector as all-1 bits (query 1000's).
+_DIRTY_PATHS = {
+    "brute_force_topk": lambda c, q: sim.brute_force_topk(c, q, k=48),
+    "ivf_topk": lambda c, q: sim.ivf_topk(c, q, k=48, n_probe=3),
+    "lsh_topk": lambda c, q: sim.lsh_topk(c, q, _PLANE, k=48),
+    "diversified_topk": lambda c, q: sim.diversified_topk(
+        c, q, k=48, per_group=48
+    ),
+    "hamming_rerank_topk": lambda c, q: sim.hamming_rerank_topk(
+        c, q, _PLANE, k=48, cand_factor=1
+    ),
+    "ivfpq_rerank_topk": lambda c, q: sim.ivfpq_rerank_topk(
+        c, q, k=48, cand_factor=1, n_probe=3, m=2, k_codes=4
+    ),
+}
+_DIRTY = {"null": None, "ragged": [0.3], "zero": [0.0, 0.0, 0.0, 0.0]}
+
+
+@pytest.mark.parametrize(
+    "path, dirty",
+    [(p, d) for p in _DIRTY_PATHS for d in _DIRTY],
+    # the brute-force cases keep their bare ids ("null", "ragged")
+    ids=[
+        d if p == "brute_force_topk" else f"{p}-{d}"
+        for p in _DIRTY_PATHS
+        for d in _DIRTY
+    ],
+)
+def test_brute_force_topk_dirty_corpus_vector(spark, path, dirty):
+    """A NULL, ragged or all-zero corpus vector scores NULL and ranks
+    last on every exact-cosine top-k path; every other row scores."""
+    import math
+
+    rows = [
+        (
+            i,
+            i % 3,
+            [
+                math.cos(0.7 * i) + 0.1,
+                math.sin(1.3 * i),
+                0.5 * math.cos(2.1 * i),
+                0.5 * math.sin(0.4 * i),
+            ],
+        )
+        for i in range(48)
+    ]
+    rows[40] = (40, 1, _DIRTY[dirty])
     corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, dirty), (3, [0.6, 0.8]), (4, [0.0, 1.0])],
-        "vec_id long, embedding array<float>",
+        rows, "vec_id long, label long, embedding array<float>"
     )
     qs = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "query_id long, embedding array<float>"
+        [(1000, [1.0, 0.0, 0.0, 0.0]), (1001, [-1.0, 0.0, 0.0, 0.0])],
+        "query_id long, embedding array<float>",
     )
-    got = [
-        r.vec_id
-        for r in sorted(
-            sim.brute_force_topk(corpus, qs, k=2).collect(),
-            key=lambda r: r.rank,
-        )
-    ]
-    # id 2's cosine is NULL (NULL norm, or zip_with NULL-pads the short
-    # vector so the dot fold sums to NULL); desc_nulls_last ranks it
-    # below every scored row, so its smaller id cannot win the k=2 cut
-    assert got == [1, 3]
+    got = _DIRTY_PATHS[path](corpus, qs).collect()
+    per_query = {}
+    for r in got:
+        per_query[r.query_id] = per_query.get(r.query_id, 0) + 1
+    hits = [r for r in got if r.vec_id == 40]
+    # NULL vector: NULL norm; ragged: zip_with NULL-pads the short
+    # vector so the dot fold sums to NULL; zero: the zero-denominator
+    # gate. desc_nulls_last puts the NULL below every scored row.
+    assert hits, "the dirty vector must reach the scorer"
+    assert all(r.cos_sim is None for r in hits)
+    assert all(r.rank == per_query[r.query_id] for r in hits)
+    assert all(r.cos_sim is not None for r in got if r.vec_id != 40)
 
 
 @pytest.mark.parametrize(
@@ -910,8 +960,10 @@ def test_exact_threshold_pairs_multiblock_budget(spark, sf_dir):
     assert tiny == wide
 
 
-# Registry queries that reach brute_force_topk, _assign_nearest or
-# _pq_encode_nv, run against their DuckDB oracles on the default path.
+# Registry queries that reach similarity.py's top-k entry points, run
+# against their DuckDB oracles on the default path: every candidate
+# generator (cross, bucket, probed cells, shortlist), scorer (exact
+# cosine, int8, Hamming, ADC) and ranker runs here.
 RETRIEVAL_ORACLE_QUERIES = [
     "cosine_topk",
     "ivf_topk",
@@ -921,6 +973,18 @@ RETRIEVAL_ORACLE_QUERIES = [
     "pq_topk_recall",
     "ivfpq_residual_recall",
     "filtered_ann_topk",
+    "ivfpq_topk_recall",
+    "ivfpq_rerank_recall",
+    "lsh_topk",
+    "binary_hamming_recall",
+    "binary_rerank_recall",
+    "int8_topk_recall",
+    "diversified_topk",
+    "mmr_topk",
+    "rrf_fusion",
+    "filtered_ann_audit",
+    "hybrid_search",
+    "ivf_cell_stats",
 ]
 
 
