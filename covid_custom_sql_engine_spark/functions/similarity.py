@@ -2091,6 +2091,7 @@ def _ivfpq_serve(
     qrr = []
     dist = _adc_lut_sum(m)
     if resid_cn is not None:
+        # qr takes _qn's place, so one LUT projection serves both forms
         probes = probes.join(resid_cn, "cell").select(
             query_id_col,
             "cell",
