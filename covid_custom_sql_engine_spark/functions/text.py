@@ -22,9 +22,12 @@ PUNCT_CLASS = "[.,;:!?]"
 
 
 def tokens(text_col: str | Column) -> Column:
-    """Lowercased whitespace tokens, empties removed."""
+    """Lowercased whitespace tokens, empties removed; NULL text → NULL.
+    ``array_remove`` is codegen'd; the equivalent ``filter(…, t -> t !=
+    '')`` is an interpreted higher-order function. ``split`` never
+    yields a NULL element, so the two agree on every input."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.filter(F.split(F.lower(F.trim(c)), r"\s+"), lambda t: t != "")
+    return F.array_remove(F.split(F.lower(F.trim(c)), r"\s+"), "")
 
 
 def token_count(text_col: str | Column) -> Column:

@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_parallelism() -> tuple[str, int]:
+    """(master URL, shuffle partitions) for this host. ``SPARK_GRAFT_CPUS``
+    sets the core count (default: the host's, ``os.cpu_count()``) and
+    ``SPARK_MASTER`` overrides the master; partitions are the core
+    count, at least 8."""
+    host = os.cpu_count() or 1
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host))
+    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    return master, max(int(cpus) if cpus.isdigit() else host, 8)
+
+
 def get_spark(app_name: str = "covid_custom_sql_engine_spark") -> SparkSession:
     """Build (or fetch) the session.
 
@@ -21,12 +32,11 @@ def get_spark(app_name: str = "covid_custom_sql_engine_spark") -> SparkSession:
     re-plans from actual map-output sizes, so the same config works at
     sf0.001 locally and at 100 TB on a 1000-executor cluster.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    master, partitions = local_parallelism()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) if cpus.isdigit() else 32, 8)))
+        .config("spark.sql.shuffle.partitions", str(partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

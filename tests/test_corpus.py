@@ -509,6 +509,25 @@ def test_bpe_dirty_input(spark):
     assert enc == {3: (["a_b"], 2, 1), 4: (["solo"], 1, 1)}
 
 
+@pytest.mark.parametrize("fn", [cp.bpe_train, cp.bpe_encode])
+def test_bpe_driver_round_trips(spark, fn):
+    """One driver round trip per merge round: the tokenize pin (1 job),
+    per round the pair-count query pulled with ``first()`` (its shuffle
+    map stage and its result, 2 jobs under AQE), then the caller's
+    action (1 job). A per-round broadcast, an eager state pin or an
+    apply job after the last round each add jobs and fail this."""
+    sc = spark.sparkContext
+    df = _docs(spark, [(1, "a b a b a b"), (2, "b b b c"), (3, "a b c d")])
+    group = f"bpe-round-trips-{fn.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = fn(df, rounds=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1 + 2 * 3 + 1
+
+
 @pytest.mark.parametrize(
     "name", ["bpe_pair_counts", "bpe_train_merges", "bpe_encoded_lengths"]
 )

@@ -82,6 +82,39 @@ def test_token_count_empty_text(spark):
     assert got == [0, 0, 2]
 
 
+# whitespace runs (tab, newline, CR; NBSP and ideographic space are not
+# in Java's \s), case, non-ASCII and regex-looking characters
+_TOKEN_PARTS = [
+    " ", "  ", "\t", "\n", "\r\n", " \t\n ", "\u00a0", "\u3000",
+    "a", "B", "the", "Ünïcödé", "日本語", "é", ".*", "$1", "x_y", "",
+]
+
+
+def test_tokens_matches_filter_lambda(spark):
+    """``tokens`` equals the higher-order ``filter(split(…), t -> t !=
+    '')`` form on NULL, empty and blank text, tab/newline runs, leading
+    and trailing whitespace and non-ASCII text, over seeded random
+    strings."""
+    import random
+
+    rng = random.Random(11)
+    texts = [None, "", " ", "   ", "\t", "\n\n", " \t\n ", " lead", "trail ",
+             "\tboth\n", "Ünïcödé 日本語", "a b"]
+    texts += [
+        "".join(rng.choice(_TOKEN_PARTS) for _ in range(rng.randint(0, 12)))
+        for _ in range(1000)
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i long, text string")
+    old = F.filter(F.split(F.lower(F.trim("text")), r"\s+"), lambda t: t != "")
+    rows = df.select("text", old.alias("old"), tx.tokens("text").alias("new")).collect()
+    assert len(rows) == len(texts)
+    assert sum(r.old is None for r in rows) == 1
+    assert sum(r.old == [] for r in rows) > 10
+    bad = [r for r in rows if r.old != r.new]
+    assert not bad, bad[:5]
+
+
 def test_quality_score_bounds(spark):
     df = spark.createDataFrame([("the and of to in is that it for was " * 20,), ("",)], "text string")
     rows = df.select(tx.quality_score("text").alias("q")).collect()

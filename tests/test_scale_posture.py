@@ -86,3 +86,24 @@ def test_aqe_splits_skewed_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_local_parallelism_follows_host(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset the session is sized to the host's
+    cores, not a fixed 32; set, it wins; partitions are at least 8."""
+    import os
+
+    from covid_custom_sql_engine_spark.session import local_parallelism
+
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: 4)
+    assert local_parallelism() == ("local[4]", 8)
+    monkeypatch.setattr(os, "cpu_count", lambda: 12)
+    assert local_parallelism() == ("local[12]", 12)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    assert local_parallelism() == ("local[2]", 8)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "*")
+    assert local_parallelism() == ("local[*]", 12)
+    monkeypatch.setenv("SPARK_MASTER", "local[3]")
+    assert local_parallelism()[0] == "local[3]"

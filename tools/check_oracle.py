@@ -4,7 +4,7 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on
 DuckDB over the same parquet tables, then compares row count, column
 names, and order-insensitive values (columns sorted by name, rows sorted
 by all columns, NaN≡NULL normalization). Reports per-query PASS/FAIL
-with first differing rows.
+with first differing rows, and the Spark and DuckDB seconds apart.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -97,10 +97,12 @@ def main():
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
             continue
+        spark_s = time.time() - t0
         if name not in oracles:
-            print(f"OK(rows-only) {name}: {len(srows)} rows in {time.time()-t0:.1f}s")
+            print(f"OK(rows-only) {name}: {len(srows)} rows, spark {spark_s:.1f}s")
             n_pass += 1
             continue
+        t0 = time.time()
         try:
             bad_types = oracle_type_violations(con, oracles[name])
             res = con.execute(oracles[name])
@@ -110,6 +112,7 @@ def main():
             print(f"FAIL {name}: duckdb error: {e}")
             n_fail += 1
             continue
+        times = f"spark {spark_s:.1f}s, duckdb {time.time() - t0:.1f}s"
         problems = []
         if bad_types:
             problems.append(
@@ -127,10 +130,10 @@ def main():
                 diffs = [(a, b) for a, b in zip(sk, dk) if a != b][:3]
                 problems.append(f"values differ; first diffs {diffs}")
         if problems:
-            print(f"FAIL {name}: {'; '.join(problems)}")
+            print(f"FAIL {name}: {'; '.join(problems)} ({times})")
             n_fail += 1
         else:
-            print(f"PASS {name}: {len(srows)} rows in {time.time()-t0:.1f}s")
+            print(f"PASS {name}: {len(srows)} rows, {times}")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0

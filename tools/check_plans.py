@@ -353,7 +353,7 @@ EXPECT = {
     "ann_join_clusters": (3, False, True),
     # checkpoint-leaf final plan, as bfs_distances
     "sssp_bounded_costs": (2, False, False),
-    # checkpoint-leaf union of per-round 1-row argmax frames: no scans
+    # local relation of the collected per-round argmax rows: no scans
     "bpe_train_merges": (2, False, False),
     # checkpoint-leaf final state select (the encode step): no scans
     "bpe_encoded_lengths": (2, False, False),
