@@ -28,18 +28,27 @@ is real and tested. Codecs come in two tiers:
 - ``fake_decode_features`` remains the deterministic bytes-only
   stand-in used where payloads are arbitrary (length, byte statistics).
 
-Everything runs through ``mapInPandas`` — per-partition Arrow batches,
-no per-row Python overhead, and constant memory per batch regardless of
-corpus size.
+Every codec crosses the JVM→Python boundary through ONE adapter,
+``_map_rows``: ``mapInPandas`` over per-partition Arrow batches, one
+pandas batch out per batch in (constant memory per batch regardless of
+corpus size), the key columns passed through with their own names and
+types. NULL contract: a NULL payload (or id, for the ``synth_*_media``
+encoders), or a payload its codec rejects with ``ValueError`` /
+``NotImplementedError``, yields one row of the keys with all-NULL
+features; any other exception fails the job.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from covid_custom_sql_engine_spark.functions.jpeg_codec import decode_jpeg, encode_jpeg
+from covid_custom_sql_engine_spark.functions.png_codec import decode_png, encode_png
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -52,10 +61,49 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = (
-    "media_id long, media_type string, n_bytes long, byte_sum long, "
-    "byte_mean double, head_hex string"
-)
+# Feature schemas name only the columns a codec computes; the key
+# columns in front of them come from the input frame (see _map_rows).
+FEATURE_SCHEMA = "n_bytes long, byte_sum long, byte_mean double, head_hex string"
+
+
+def _map_rows(
+    df: DataFrame, fn: Callable[[object], list[tuple]], schema: str
+) -> DataFrame:
+    """The one Arrow boundary of this module. The LAST column of ``df``
+    is the value ``fn`` reads; every column before it is a key that
+    passes through with its own name and type. ``fn`` maps one non-NULL
+    value to a list of feature tuples in ``schema`` order, one per
+    output row (one for a still image, one per frame for a video).
+
+    NULL contract: a NULL value, or one ``fn`` rejects with
+    ``ValueError`` / ``NotImplementedError`` (the codecs' documented
+    malformed and unsupported-format errors), gives ONE row of the keys
+    and all-NULL features; any other exception fails the job. The
+    iterator yields one pandas batch per input Arrow batch."""
+    *keys, value = df.columns
+    feats = T.StructType.fromDDL(schema).fields
+    out = T.StructType(df.schema.fields[:-1] + feats)
+    null_rows = [(None,) * len(feats)]
+
+    def _feats(v) -> list[tuple]:
+        try:
+            return fn(v)
+        except (ValueError, NotImplementedError):
+            return null_rows
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            vals = pdf[value]
+            yield pd.DataFrame(
+                [
+                    (*k, *f)
+                    for *k, v, null in zip(*(pdf[c] for c in keys), vals, vals.isna())
+                    for f in (null_rows if null else _feats(v))
+                ],
+                columns=out.fieldNames(),
+            )
+
+    return df.mapInPandas(_run, out)
 
 
 def decode_ppm(payload: bytes) -> "np.ndarray":
@@ -135,13 +183,9 @@ def decode_image(payload: bytes) -> "np.ndarray":
     if payload[:2] == b"P6":
         return decode_ppm(payload)
     if payload[:2] == b"\xff\xd8":
-        from covid_custom_sql_engine_spark.functions.jpeg_codec import decode_jpeg
-
         img = decode_jpeg(payload)
         return np.repeat(img[:, :, None], 3, axis=2) if img.ndim == 2 else img
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        from covid_custom_sql_engine_spark.functions.png_codec import decode_png
-
         img = decode_png(payload)
         if img.ndim == 2:
             return np.repeat(img[:, :, None], 3, axis=2)
@@ -184,30 +228,24 @@ def extract_features(df: DataFrame) -> DataFrame:
 
     Batch shape: the iterator yields one output pdf per input Arrow
     batch; columns are pruned to (media_id, media_type, payload) before
-    the UDF so only needed bytes cross the JVM→Python boundary.
+    the UDF so only needed bytes cross the JVM→Python boundary. A NULL
+    payload gives NULL features, as SQL's ``octet_length(NULL)`` does.
     """
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["payload"].map(fake_decode_features)
-            out = pd.DataFrame(list(feats))
-            out.insert(0, "media_id", pdf["media_id"].values)
-            out.insert(1, "media_type", pdf["media_type"].values)
-            yield out
-
-    return df.select("media_id", "media_type", "payload").mapInPandas(
-        _extract, schema=FEATURE_SCHEMA
+    return _map_rows(
+        df.select("media_id", "media_type", "payload"),
+        lambda p: [tuple(fake_decode_features(p).values())],
+        FEATURE_SCHEMA,
     )
 
 
 IMAGE_FEATURE_SCHEMA = (
-    "media_id long, height int, width int, mean_r double, mean_g double, "
-    "mean_b double, thumb_hex string"
+    "height int, width int, mean_r double, mean_g double, mean_b double, "
+    "thumb_hex string"
 )
 
 AUDIO_FEATURE_SCHEMA = (
-    "media_id long, sample_rate int, n_samples long, channels int, "
-    "rms double, zero_crossings long"
+    "sample_rate int, n_samples long, channels int, rms double, "
+    "zero_crossings long"
 )
 
 
@@ -219,29 +257,13 @@ def image_features(df: DataFrame, thumb: int = 4) -> DataFrame:
     formats this container can decode. Columns prune to (media_id,
     payload) before the Python boundary."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_image(bytes(payload))
-                small = resize_nearest(img, thumb, thumb)
-                gray = small.mean(axis=2).astype(np.uint8)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "mean_r": float(img[:, :, 0].mean()),
-                        "mean_g": float(img[:, :, 1].mean()),
-                        "mean_b": float(img[:, :, 2].mean()),
-                        "thumb_hex": gray.tobytes().hex(),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def _image(payload: bytes) -> list[tuple]:
+        img = decode_image(payload)
+        gray = resize_nearest(img, thumb, thumb).mean(axis=2).astype(np.uint8)
+        means = (float(img[:, :, c].mean()) for c in range(3))
+        return [(*img.shape[:2], *means, gray.tobytes().hex())]
 
-    return df.select("media_id", "payload").mapInPandas(
-        _extract, schema=IMAGE_FEATURE_SCHEMA
-    )
+    return _map_rows(df.select("media_id", "payload"), _image, IMAGE_FEATURE_SCHEMA)
 
 
 def audio_features(df: DataFrame) -> DataFrame:
@@ -250,27 +272,14 @@ def audio_features(df: DataFrame) -> DataFrame:
     the first channel — the loudness/voicedness screen of an audio
     curation pipeline."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples, rate = decode_audio(bytes(payload))
-                ch0 = samples[:, 0].astype(np.float64)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": rate,
-                        "n_samples": samples.shape[0],
-                        "channels": samples.shape[1],
-                        "rms": float(np.sqrt(np.mean(ch0 * ch0))) if len(ch0) else 0.0,
-                        "zero_crossings": int(np.sum(np.diff(np.signbit(ch0)))),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def _audio(payload: bytes) -> list[tuple]:
+        samples, rate = decode_audio(payload)
+        ch0 = samples[:, 0].astype(np.float64)
+        rms = float(np.sqrt(np.mean(ch0 * ch0))) if len(ch0) else 0.0
+        crossings = int(np.sum(np.diff(np.signbit(ch0))))
+        return [(rate, *samples.shape, rms, crossings)]
 
-    return df.select("media_id", "payload").mapInPandas(
-        _extract, schema=AUDIO_FEATURE_SCHEMA
-    )
+    return _map_rows(df.select("media_id", "payload"), _audio, AUDIO_FEATURE_SCHEMA)
 
 
 def _formula_image(mid: int, xs: "np.ndarray", ys: "np.ndarray") -> "np.ndarray":
@@ -291,8 +300,6 @@ def _wav_payload(vals: "np.ndarray", rate: int) -> bytes:
     """Mono PCM-16 RIFF/WAVE framing around int16 samples — the single
     container builder every WAV synth uses, so the chunk-size
     arithmetic exists once."""
-    import struct
-
     fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
     data = vals.astype("<i2").tobytes()
     return (
@@ -308,6 +315,40 @@ def _wav_payload(vals: "np.ndarray", rate: int) -> bytes:
     )
 
 
+def _synth_media(
+    df: DataFrame, id_col: str, payload_fn: Callable[[int], bytes]
+) -> DataFrame:
+    """(media_id, payload) with ``payload_fn(id)`` as the payload: the
+    ENCODE half every ``synth_*_media`` shares. Only the id column
+    crosses into Python; ``media_id`` keeps ``id_col``'s type and a NULL
+    id gets a NULL payload. The payload formulas are functions of an
+    integer id, so a non-integral ``id_col`` raises ``TypeError`` here,
+    before any worker starts."""
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, T.IntegralType):
+        raise TypeError(
+            f"synth media ids must be integral; {id_col!r} is {id_type.simpleString()}"
+        )
+    ids = F.col(id_col)
+    return _map_rows(
+        df.select(ids.alias("media_id"), ids.alias("_id")),
+        lambda i: [(payload_fn(int(i)),)],
+        "payload binary",
+    )
+
+
+def _const_jpeg(i: int, shift: int, w: int, h: int, subsampling: str = "444") -> bytes:
+    """Baseline JFIF of the constant-colour ``h``×``w`` RGB image
+    ``((id·7 + shift) mod 256, (id·11 + shift) mod 256, (id·13 + shift)
+    mod 256)`` with all-8 quantization tables: the closed-form frame of
+    :func:`synth_jpeg_media` (which explains why it round-trips exactly)
+    and of every :func:`synth_mjpeg_avi_media` frame."""
+    q8 = np.full((8, 8), 8, np.int32)
+    img = np.empty((h, w, 3), np.uint8)
+    img[...] = [(i * k + shift) % 256 for k in (7, 11, 13)]
+    return encode_jpeg(img, luma_quant=q8, chroma_quant=q8, subsampling=subsampling)
+
+
 def synth_ppm_media(
     df: DataFrame, id_col: str = "doc_id", w: int = 8, h: int = 6
 ) -> DataFrame:
@@ -318,18 +359,11 @@ def synth_ppm_media(
     closed-form SQL oracle, since the fixture tables carry no binary
     columns. Same Arrow-batched mapInPandas plumbing as the decoders;
     only the id column crosses into Python."""
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        header = b"P6\n%d %d\n255\n" % (w, h)
-        ys, xs = np.mgrid[0:h, 0:w]
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                arr = _formula_image(int(mid), xs, ys)
-                rows.append({"media_id": int(mid), "payload": header + arr.tobytes()})
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col).mapInPandas(_enc, "media_id long, payload binary")
+    header = b"P6\n%d %d\n255\n" % (w, h)
+    ys, xs = np.mgrid[0:h, 0:w]
+    return _synth_media(
+        df, id_col, lambda i: header + _formula_image(i, xs, ys).tobytes()
+    )
 
 
 def synth_wav_media(
@@ -338,18 +372,10 @@ def synth_wav_media(
     """Deterministic mono PCM-16 RIFF/WAVE payload per id — sample i is
     ``((id·13 + i·17) mod 65536) − 32768``. The audio sibling of
     :func:`synth_ppm_media` for end-to-end real-codec round-trips."""
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(n, dtype=np.int64)
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                vals = (int(mid) * 13 + idx * 17) % 65536 - 32768
-                rows.append(
-                    {"media_id": int(mid), "payload": _wav_payload(vals, rate)}
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col).mapInPandas(_enc, "media_id long, payload binary")
+    idx = np.arange(n, dtype=np.int64)
+    return _synth_media(
+        df, id_col, lambda i: _wav_payload((i * 13 + idx * 17) % 65536 - 32768, rate)
+    )
 
 
 def synth_jpeg_media(
@@ -370,34 +396,7 @@ def synth_jpeg_media(
     + clip at each step) a SQL oracle can replicate literally. The
     entropy-coded segment still runs the real Huffman/zigzag/IDCT
     machinery — nothing about the *decode* knows the image is constant."""
-    import numpy as np
-
-    from covid_custom_sql_engine_spark.functions.jpeg_codec import encode_jpeg
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q8 = np.full((8, 8), 8, np.int32)
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                i = int(mid)
-                img = np.empty((h, w, 3), np.uint8)
-                img[..., 0] = (i * 7) % 256
-                img[..., 1] = (i * 11) % 256
-                img[..., 2] = (i * 13) % 256
-                rows.append(
-                    {
-                        "media_id": i,
-                        "payload": encode_jpeg(
-                            img,
-                            luma_quant=q8,
-                            chroma_quant=q8,
-                            subsampling=subsampling,
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col).mapInPandas(_enc, "media_id long, payload binary")
+    return _synth_media(df, id_col, lambda i: _const_jpeg(i, 0, w, h, subsampling))
 
 
 def synth_png_media(
@@ -410,26 +409,12 @@ def synth_png_media(
     lossless, so unlike the JPEG synth the pixels can vary freely and
     the oracle is the raw formula itself; the odd 9×7 dimensions also
     exercise non-tile-aligned strides."""
-    import numpy as np
-
-    from covid_custom_sql_engine_spark.functions.png_codec import encode_png
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ys, xs = np.mgrid[0:h, 0:w]
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "payload": encode_png(
-                            _formula_image(int(mid), xs, ys), filter_mode="cycle"
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col).mapInPandas(_enc, "media_id long, payload binary")
+    ys, xs = np.mgrid[0:h, 0:w]
+    return _synth_media(
+        df,
+        id_col,
+        lambda i: encode_png(_formula_image(i, xs, ys), filter_mode="cycle"),
+    )
 
 
 def decode_y4m(payload: bytes) -> tuple["np.ndarray", int, int]:
@@ -538,36 +523,46 @@ def synth_y4m_media(
     else:
         raise ValueError(f"synth colorspace must be C444/C420/C422, got {colorspace}")
 
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        header = b"YUV4MPEG2 W%d H%d F4:1 Ip A1:1 %s\n" % (
-            w,
-            h,
-            colorspace.encode(),
-        )
-        ys, xs = np.mgrid[0:h, 0:w]
-        cys, cxs = np.mgrid[0:ch, 0:cw]
-        grids = [(xs, ys), (cxs, cys), (cxs, cys)]
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                i = int(mid)
-                buf = bytearray(header)
-                for t in range(n_frames):
-                    buf += b"FRAME\n"
-                    for p, (gx, gy) in enumerate(grids):
-                        buf += (
-                            (i * 7 + gx * 3 + gy * 5 + p * 11 + 97 * (t // 3)) % 256
-                        ).astype(np.uint8).tobytes()
-                rows.append({"media_id": i, "payload": bytes(buf)})
-            yield pd.DataFrame(rows)
+    header = b"YUV4MPEG2 W%d H%d F4:1 Ip A1:1 %s\n" % (w, h, colorspace.encode())
+    ys, xs = np.mgrid[0:h, 0:w]
+    cys, cxs = np.mgrid[0:ch, 0:cw]
+    grids = [(xs, ys), (cxs, cys), (cxs, cys)]
 
-    return df.select(id_col).mapInPandas(_enc, "media_id long, payload binary")
+    def _y4m(i: int) -> bytes:
+        buf = bytearray(header)
+        for t in range(n_frames):
+            buf += b"FRAME\n"
+            for p, (gx, gy) in enumerate(grids):
+                buf += (
+                    (i * 7 + gx * 3 + gy * 5 + p * 11 + 97 * (t // 3)) % 256
+                ).astype(np.uint8).tobytes()
+        return bytes(buf)
+
+    return _synth_media(df, id_col, _y4m)
 
 
 VIDEO_FRAME_SCHEMA = (
-    "media_id long, frame_idx int, ts_ms long, mean_y double, "
-    "mean_cb double, mean_cr double, frame_diff double"
+    "frame_idx int, ts_ms long, mean_y double, mean_cb double, mean_cr double, "
+    "frame_diff double"
 )
+
+
+def _frame_rows(frames: "np.ndarray", ts_ms: Callable[[int], int]) -> list[tuple]:
+    """One (frame_idx, ts_ms, three per-channel means, frame_diff) row
+    per frame of an (n, h, w, 3) stack — the body both video extractors
+    share. ``frame_diff`` is the mean absolute difference against the
+    previous frame across all channels (0.0 for frame 0). Integer sums
+    stay exact in float64, so closed-form oracles hash-match."""
+    n, fh, fw, _ = frames.shape
+    px = fh * fw
+    rows, prev = [], None
+    for t in range(n):
+        f = frames[t].astype(np.int64)
+        diff = 0.0 if prev is None else float(np.abs(f - prev).sum() / (3 * px))
+        means = (float(f[:, :, c].sum() / px) for c in range(3))
+        rows.append((t, ts_ms(t), *means, diff))
+        prev = f
+    return rows
 
 
 def video_frame_features(df: DataFrame) -> DataFrame:
@@ -582,38 +577,11 @@ def video_frame_features(df: DataFrame) -> DataFrame:
     hash-matches. Only (media_id, payload) crosses into Python; state
     per document is one frame pair, never the whole video."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames, num, den = decode_y4m(bytes(payload))
-                n, fh, fw, _ = frames.shape
-                px = fh * fw
-                prev = None
-                for t in range(n):
-                    f = frames[t].astype(np.int64)
-                    diff = (
-                        0.0
-                        if prev is None
-                        else float(np.abs(f - prev).sum() / (3 * px))
-                    )
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": t,
-                            "ts_ms": t * 1000 * den // num,
-                            "mean_y": float(f[:, :, 0].sum() / px),
-                            "mean_cb": float(f[:, :, 1].sum() / px),
-                            "mean_cr": float(f[:, :, 2].sum() / px),
-                            "frame_diff": diff,
-                        }
-                    )
-                    prev = f
-            yield pd.DataFrame(rows)
+    def _video(payload: bytes) -> list[tuple]:
+        frames, num, den = decode_y4m(payload)
+        return _frame_rows(frames, lambda t: t * 1000 * den // num)
 
-    return df.select("media_id", "payload").mapInPandas(
-        _extract, schema=VIDEO_FRAME_SCHEMA
-    )
+    return _map_rows(df.select("media_id", "payload"), _video, VIDEO_FRAME_SCHEMA)
 
 
 def synth_square_wav_media(
@@ -631,20 +599,13 @@ def synth_square_wav_media(
     the spectral ground truth is a closed-form integer function of the
     id — all samples are exact integers, no transcendentals in the
     fixture."""
+    idx = np.arange(n)
 
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(n)
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                p = 2 * (1 + int(mid) % 6)
-                vals = np.where((idx // (p // 2)) % 2 == 0, amp, -amp)
-                rows.append(
-                    {"media_id": int(mid), "payload": _wav_payload(vals, rate)}
-                )
-            yield pd.DataFrame(rows)
+    def _square(i: int) -> bytes:
+        half = 1 + i % 6
+        return _wav_payload(np.where((idx // half) % 2 == 0, amp, -amp), rate)
 
-    return df.select(id_col).mapInPandas(_enc, "media_id long, payload binary")
+    return _synth_media(df, id_col, _square)
 
 
 def audio_spectrum_features(df: DataFrame, fft: bool = False) -> DataFrame:
@@ -654,8 +615,8 @@ def audio_spectrum_features(df: DataFrame, fft: bool = False) -> DataFrame:
     tone/silence/voicedness screening. Two execution modes, one
     contract:
 
-    - ``fft=False`` (the ORACLE mode): direct DFT — two (n/2, n)
-      cos/sin matrix products per same-length group, explicit
+    - ``fft=False`` (the ORACLE mode): direct DFT — two products with
+      (n, n/2) cos/sin matrices memoized per sample count, explicit
       summation. O(n²) per document, exact cross-engine arithmetic: a
       SQL oracle computing the same spectrum with its own libm reaches
       the same argmax (1-ulp sin/cos differences cannot flip an argmax
@@ -670,67 +631,32 @@ def audio_spectrum_features(df: DataFrame, fft: bool = False) -> DataFrame:
     Only the bin ARGMAX and its exact-arithmetic frequency cross the
     comparison boundary (float power stays internal). Ties
     (exactly-equal powers) break toward the lower bin in both modes."""
+    mats: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # (cos, sin) DFT matrices memoized per sample count: one pair of
-        # (B, n) @ (n, n/2) products scores a whole same-length group of
-        # the Arrow batch instead of per-document matmuls (~10× on
-        # fixed-length corpora, the common case)
-        mats: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            decoded = []
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples, rate = decode_audio(bytes(payload))
-                v = samples[:, 0].astype(np.float64)
-                if len(v) < 2:  # no analyzable bins: degenerate clip, not a
-                    # batch-killing error — emit the null spectrum row
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "n_samples": len(v),
-                            "dominant_bin": 0,
-                            "dominant_hz": 0.0,
-                        }
-                    )
-                    continue
-                decoded.append((int(mid), rate, v))
-            by_n: dict[int, list[int]] = {}
-            for pos, (_, _, v) in enumerate(decoded):
-                by_n.setdefault(len(v), []).append(pos)
-            for n, idxs in by_n.items():
-                vmat = np.stack([decoded[i][2] for i in idxs])
-                if fft:
-                    spec = np.fft.rfft(vmat, axis=1)[:, 1 : n // 2 + 1]
-                    power = spec.real**2 + spec.imag**2
-                else:
-                    if n not in mats:
-                        ang = (
-                            2.0
-                            * np.pi
-                            * np.arange(1, n // 2 + 1)[:, None]
-                            * np.arange(n)[None, :]
-                            / n
-                        )
-                        mats[n] = (np.cos(ang).T, np.sin(ang).T)
-                    cosm, sinm = mats[n]
-                    power = (vmat @ cosm) ** 2 + (vmat @ sinm) ** 2
-                bests = power.argmax(axis=1) + 1
-                for i, best in zip(idxs, bests):
-                    mid, rate, _ = decoded[i]
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "n_samples": n,
-                            "dominant_bin": int(best),
-                            "dominant_hz": (int(best) * rate) / float(n),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def _spectrum(payload: bytes) -> list[tuple]:
+        samples, rate = decode_audio(payload)
+        v = samples[:, 0].astype(np.float64)
+        n = len(v)
+        if n < 2:  # no analyzable bins: a degenerate clip, not a
+            # malformed one — emit the null spectrum row
+            return [(n, 0, 0.0)]
+        if fft:
+            spec = np.fft.rfft(v)[1 : n // 2 + 1]
+            power = spec.real**2 + spec.imag**2
+        else:
+            if n not in mats:
+                k, t = np.arange(1, n // 2 + 1)[:, None], np.arange(n)[None, :]
+                ang = 2.0 * np.pi * k * t / n
+                mats[n] = (np.cos(ang).T, np.sin(ang).T)
+            cosm, sinm = mats[n]
+            power = (v @ cosm) ** 2 + (v @ sinm) ** 2
+        best = int(power.argmax()) + 1
+        return [(n, best, (best * rate) / float(n))]
 
-    return df.select("media_id", "payload").mapInPandas(
-        _extract,
-        "media_id long, n_samples int, dominant_bin int, dominant_hz double",
+    return _map_rows(
+        df.select("media_id", "payload"),
+        _spectrum,
+        "n_samples int, dominant_bin int, dominant_hz double",
     )
 
 
@@ -783,8 +709,6 @@ def documents_as_media(df: DataFrame) -> DataFrame:
 def _avi_chunk(fourcc: bytes, body: bytes) -> bytes:
     """One RIFF chunk with the trailing pad byte RIFF requires after
     odd-sized bodies (the pad is not counted in the size field)."""
-    import struct
-
     pad = b"\x00" if len(body) % 2 else b""
     return fourcc + struct.pack("<I", len(body)) + body + pad
 
@@ -800,8 +724,6 @@ def encode_mjpeg_avi(
     LIST hdrl (avih main header + LIST strl with a 'vids'/'MJPG' strh
     and a BITMAPINFOHEADER strf), LIST movi with one '00dc' chunk per
     frame, and a standard idx1 index. fps = rate/scale."""
-    import struct
-
     n = len(jpeg_frames)
     usec = 1_000_000 * scale // rate
     max_bytes = max((len(f) for f in jpeg_frames), default=0)
@@ -868,8 +790,6 @@ def encode_mjpeg_avi(
 def _riff_subchunks(payload: bytes, pos: int, end: int):
     """Yield (fourcc, body_start, body_size) walking a RIFF chunk run,
     honoring the even-byte chunk alignment rule."""
-    import struct
-
     while pos + 8 <= end:
         fourcc = payload[pos : pos + 4]
         (size,) = struct.unpack_from("<I", payload, pos + 4)
@@ -892,10 +812,6 @@ def decode_mjpeg_avi(payload: bytes) -> tuple["np.ndarray", int]:
     (frames as (n, h, w, 3) RGB uint8, µs_per_frame). Non-MJPEG
     streams, missing headers, truncated chunks and geometry mismatches
     raise — same contract as decode_y4m."""
-    import struct
-
-    from covid_custom_sql_engine_spark.functions.jpeg_codec import decode_jpeg
-
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI payload")
     (riff_size,) = struct.unpack_from("<I", payload, 4)
@@ -949,40 +865,17 @@ def synth_mjpeg_avi_media(
     boxed into the RIFF/AVI MJPEG container at 4 fps. The decode side
     runs the genuine entropy decoder per frame; nothing knows the
     frames are constant."""
-    import numpy as np
 
-    from covid_custom_sql_engine_spark.functions.jpeg_codec import encode_jpeg
+    def _avi(i: int) -> bytes:
+        jpegs = [_const_jpeg(i, 97 * (t // 3), w, h) for t in range(n_frames)]
+        return encode_mjpeg_avi(jpegs, w, h, rate=4)
 
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q8 = np.full((8, 8), 8, np.int32)
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                i = int(mid)
-                jpegs = []
-                for t in range(n_frames):
-                    shift = 97 * (t // 3)
-                    img = np.empty((h, w, 3), np.uint8)
-                    img[..., 0] = (i * 7 + shift) % 256
-                    img[..., 1] = (i * 11 + shift) % 256
-                    img[..., 2] = (i * 13 + shift) % 256
-                    jpegs.append(
-                        encode_jpeg(img, luma_quant=q8, chroma_quant=q8)
-                    )
-                rows.append(
-                    {
-                        "media_id": i,
-                        "payload": encode_mjpeg_avi(jpegs, w, h, rate=4),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col).mapInPandas(_enc, "media_id long, payload binary")
+    return _synth_media(df, id_col, _avi)
 
 
 MJPEG_FRAME_SCHEMA = (
-    "media_id long, frame_idx int, ts_ms long, mean_r double, "
-    "mean_g double, mean_b double, frame_diff double"
+    "frame_idx int, ts_ms long, mean_r double, mean_g double, mean_b double, "
+    "frame_diff double"
 )
 
 
@@ -995,35 +888,8 @@ def mjpeg_frame_features(df: DataFrame) -> DataFrame:
     compressed path. State per document is one frame pair, never the
     whole video; only (media_id, payload) crosses into Python."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames, usec = decode_mjpeg_avi(bytes(payload))
-                n, fh, fw, _ = frames.shape
-                px = fh * fw
-                prev = None
-                for t in range(n):
-                    f = frames[t].astype(np.int64)
-                    diff = (
-                        0.0
-                        if prev is None
-                        else float(np.abs(f - prev).sum() / (3 * px))
-                    )
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": t,
-                            "ts_ms": t * usec // 1000,
-                            "mean_r": float(f[:, :, 0].sum() / px),
-                            "mean_g": float(f[:, :, 1].sum() / px),
-                            "mean_b": float(f[:, :, 2].sum() / px),
-                            "frame_diff": diff,
-                        }
-                    )
-                    prev = f
-            yield pd.DataFrame(rows)
+    def _mjpeg(payload: bytes) -> list[tuple]:
+        frames, usec = decode_mjpeg_avi(payload)
+        return _frame_rows(frames, lambda t: t * usec // 1000)
 
-    return df.select("media_id", "payload").mapInPandas(
-        _extract, schema=MJPEG_FRAME_SCHEMA
-    )
+    return _map_rows(df.select("media_id", "payload"), _mjpeg, MJPEG_FRAME_SCHEMA)

@@ -1202,7 +1202,11 @@ def exact_threshold_pairs(
     fixed default the r12 advice flagged would have packed N/8 vectors
     into one collect_list row regardless of N). Requires a numeric
     unique ``id_col`` (block routing hashes it; candidate emission
-    orders each pair by id).
+    orders each pair by id). A NULL vector's fold-dot is NULL, and so is
+    that of two vectors of different lengths (``zip_with`` NULL-pads the
+    shorter), so neither can pass the verify: NULL vectors stay out of
+    the screen, and each block holds one vector length and meets only
+    blocks of that length.
     """
     import math
 
@@ -1216,19 +1220,21 @@ def exact_threshold_pairs(
         n_vecs, dim = szrow["_n"] or 0, szrow["_dim"] or 0
         n_blocks = max(8, math.ceil(n_vecs * dim * 8 / block_budget_bytes))
 
-    g = nv.select(
+    g = nv.filter(F.col(vec_col).isNotNull()).select(
+        F.size(vec_col).alias("_dim"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("_blk"),
         F.col(id_col).alias("_bid"),
         as_double(vec_col).alias("_bv"),
     )
     packed = (
-        g.groupBy("_blk")
+        g.groupBy("_dim", "_blk")
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("_bid"), F.col("_bv")))
             ).alias("_s")
         )
         .select(
+            "_dim",
             "_blk",
             F.expr("transform(_s, s -> s._bid)").alias("_ids"),
             F.flatten(F.expr("transform(_s, s -> s._bv)")).alias("_flat"),
@@ -1240,16 +1246,20 @@ def exact_threshold_pairs(
         .localCheckpoint(eager=True)
     )
     pa = packed.select(
+        F.col("_dim").alias("_da"),
         F.col("_blk").alias("_ba"),
         F.col("_ids").alias("_idsa"),
         F.col("_flat").alias("_fa"),
     )
     pb = packed.select(
+        F.col("_dim").alias("_db"),
         F.col("_blk").alias("_bb"),
         F.col("_ids").alias("_idsb"),
         F.col("_flat").alias("_fb"),
     )
-    blk_pairs = pa.crossJoin(pb).filter(F.col("_ba") <= F.col("_bb"))
+    blk_pairs = pa.join(
+        pb, (F.col("_da") == F.col("_db")) & (F.col("_ba") <= F.col("_bb"))
+    )
     cut = float(threshold) - 1e-9
 
     def _gen(batches):
@@ -1262,10 +1272,10 @@ def exact_threshold_pairs(
                 ids_a = np.asarray(row["_idsa"], dtype=np.int64)
                 ids_b = np.asarray(row["_idsb"], dtype=np.int64)
                 a = np.asarray(row["_fa"], dtype=np.float64).reshape(
-                    len(ids_a), -1
+                    len(ids_a), row["_da"]
                 )
                 b = np.asarray(row["_fb"], dtype=np.float64).reshape(
-                    len(ids_b), -1
+                    len(ids_b), row["_da"]
                 )
                 mask = (a @ b.T) >= cut
                 if row["_ba"] == row["_bb"]:

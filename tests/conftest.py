@@ -22,19 +22,12 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
-def duck(sf_dir):
+def duck(spark, sf_dir):
     """DuckDB connection with a view per testdata table — the oracle
     side of tools/check_oracle.py."""
-    import duckdb
+    from tools.check_oracle import oracle_connection
 
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir, spark)
     yield con
     con.close()
 

@@ -529,10 +529,20 @@ def test_degenerate_media_handled():
 
 
 def test_short_wav_null_spectrum(spark):
+    """A decodable one-sample clip is degenerate, not malformed: it gets
+    the zero spectrum row, while a NULL or undecodable payload in the
+    same batch gets an all-NULL one."""
     payload = mm._wav_payload(__import__("numpy").array([123]), 8000)
-    df = spark.createDataFrame([(1, bytearray(payload))], "media_id long, payload binary")
-    r = mm.audio_spectrum_features(df).collect()[0]
+    df = spark.createDataFrame(
+        [(1, bytearray(payload)), (2, None), (3, bytearray(b"junk"))],
+        "media_id long, payload binary",
+    )
+    rows = {r.media_id: r for r in mm.audio_spectrum_features(df).collect()}
+    r = rows[1]
     assert (r.n_samples, r.dominant_bin, r.dominant_hz) == (1, 0, 0.0)
+    for mid in (2, 3):
+        r = rows[mid]
+        assert (r.n_samples, r.dominant_bin, r.dominant_hz) == (None, None, None)
 
 
 def _mk_avi(ids=(5,), n_frames=6, w=16, h=8):
@@ -686,3 +696,125 @@ def test_jpeg_420_422_roundtrip_and_444_unchanged():
     assert np.abs(d444.astype(int) - d420.astype(int)).max() <= 32
     with pytest.raises(ValueError, match="subsampling must be"):
         encode_jpeg(grad, subsampling="411")
+
+
+# ---------------------------------------------------------------------------
+# Dirty input at the Arrow boundary: every codec goes through _map_rows
+# ---------------------------------------------------------------------------
+
+_EXTRACTORS = [
+    "extract_features",
+    "image_features",
+    "audio_features",
+    "audio_spectrum_features",
+    "video_frame_features",
+    "mjpeg_frame_features",
+]
+_ENCODERS = [
+    "synth_ppm_media",
+    "synth_wav_media",
+    "synth_jpeg_media",
+    "synth_png_media",
+    "synth_y4m_media",
+    "synth_square_wav_media",
+    "synth_mjpeg_avi_media",
+]
+# extract_features computes byte statistics, so no payload is junk to it
+_DIRTY_CASES = [
+    (f, c)
+    for f in _EXTRACTORS
+    for c in ("null", "junk", "string_id", "empty")
+    if (f, c) != ("extract_features", "junk")
+] + [(f, c) for f in _ENCODERS for c in ("null_id", "string_id", "empty")]
+
+
+def _good_payload(name):
+    return {
+        "extract_features": b"abc",
+        "image_features": _make_ppm(2, 2, [1, 2, 3]),
+        "audio_features": _make_wav([1000, -1000]),
+        "audio_spectrum_features": _make_wav([1000, -1000] * 4),
+        "video_frame_features": _make_y4m(),
+        "mjpeg_frame_features": _mk_avi()[5][1],
+    }[name]
+
+
+def _extract(name, df):
+    from pyspark.sql import functions as F
+
+    if name == "extract_features":
+        df = df.select("media_id", F.lit("image").alias("media_type"), "payload")
+    return getattr(mm, name)(df)
+
+
+@pytest.mark.parametrize(
+    "name, case", _DIRTY_CASES, ids=[f"{f}-{c}" for f, c in _DIRTY_CASES]
+)
+def test_dirty_input_defined(spark, name, case):
+    """NULL contract of the adapter. Extractors: a NULL or undecodable
+    payload gives one row of its key and all-NULL features next to a
+    clean row, and a string media_id passes through. Encoders: a NULL id
+    gets a NULL payload without changing its neighbour's, and a string
+    id is a TypeError before any job runs. An empty frame gives an empty
+    result with the same columns."""
+    if name in _ENCODERS:
+        synth = getattr(mm, name)
+        if case == "string_id":
+            with pytest.raises(TypeError, match="integral"):
+                synth(spark.createDataFrame([("7",)], "doc_id string"))
+            return
+        if case == "empty":
+            out = synth(spark.createDataFrame([], "doc_id long"))
+            assert out.columns == ["media_id", "payload"] and out.collect() == []
+            return
+        clean = synth(spark.createDataFrame([(7,)], "doc_id long")).collect()
+        rows = synth(spark.createDataFrame([(7,), (None,)], "doc_id long")).collect()
+        assert sorted(rows, key=lambda r: r.media_id is None) == [
+            clean[0], (None, None)
+        ]
+        return
+
+    good = bytearray(_good_payload(name))
+    if case == "empty":
+        out = _extract(name, spark.createDataFrame([], "media_id long, payload binary"))
+        clean = _extract(
+            name, spark.createDataFrame([(1, good)], "media_id long, payload binary")
+        )
+        assert out.columns == clean.columns and out.collect() == []
+        return
+    if case == "string_id":
+        df = spark.createDataFrame([("a", good)], "media_id string, payload binary")
+        rows = _extract(name, df).collect()
+        assert rows and {r.media_id for r in rows} == {"a"}
+        assert all(v is not None for r in rows for v in r)
+        return
+    bad = None if case == "null" else bytearray(b"junk")
+    df = spark.createDataFrame([(1, good), (2, bad)], "media_id long, payload binary")
+    out = _extract(name, df)
+    n_keys = 2 if name == "extract_features" else 1
+    rows = out.collect()
+    dirty = [r for r in rows if r.media_id == 2]
+    assert len(dirty) == 1 and all(v is None for v in dirty[0][n_keys:])
+    assert all(v is not None for r in rows if r.media_id == 1 for v in r)
+
+
+# Registry queries over the media codecs, run against their DuckDB
+# oracles on the default path. mjpeg_stats_real is left out: it takes
+# 14-16 s at sf0.001, and test_mjpeg_frame_features_and_scene_cut covers
+# its path.
+MEDIA_ORACLE_QUERIES = [
+    "multimodal_features",
+    "image_stats_real",
+    "audio_stats_real",
+    "jpeg_stats_real",
+    "png_stats_real",
+    "video_stats_real",
+    "video_stats_c420",
+    "audio_spectrum_real",
+    "jpeg420_stats_real",
+]
+
+
+@pytest.mark.parametrize("name", MEDIA_ORACLE_QUERIES)
+def test_media_query_matches_oracle(matches_oracle, name):
+    matches_oracle(name)

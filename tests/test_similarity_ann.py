@@ -960,6 +960,34 @@ def test_exact_threshold_pairs_multiblock_budget(spark, sf_dir):
     assert tiny == wide
 
 
+def test_exact_threshold_pairs_dirty_vectors(spark):
+    """A NULL, a ragged and an all-zero vector: the pair set equals the
+    naive cross join's fold ``dot >= threshold`` on the same input. The
+    two length-2 vectors meet each other (their fold-dot is 0.5) and no
+    length-3 vector."""
+    import math
+
+    rows = [
+        (i, [math.cos(0.7 * i), math.sin(0.7 * i), 0.1 * i]) for i in range(12)
+    ]
+    rows += [(100, None), (101, [0.5, 0.5]), (102, [0.0, 0.0, 0.0]), (103, [0.6, 0.4])]
+    nv = spark.createDataFrame(rows, "vec_id long, _nv array<double>")
+    got = {(r.id_a, r.id_b) for r in sim.exact_threshold_pairs(nv, 0.3).collect()}
+    a = nv.select(F.col("vec_id").alias("id_a"), F.col("_nv").alias("va"))
+    b = nv.select(F.col("vec_id").alias("id_b"), F.col("_nv").alias("vb"))
+    naive = {
+        (r.id_a, r.id_b)
+        for r in a.crossJoin(b)
+        .filter(
+            (F.col("id_a") < F.col("id_b"))
+            & (sim.dot(F.col("va"), F.col("vb")) >= 0.3)
+        )
+        .collect()
+    }
+    assert (101, 103) in naive
+    assert got == naive
+
+
 # Registry queries that reach similarity.py's top-k entry points, run
 # against their DuckDB oracles on the default path: every candidate
 # generator (cross, bucket, probed cells, shortlist), scorer (exact

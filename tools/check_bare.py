@@ -32,19 +32,10 @@ def main():
     # what the grading driver does: a plain session, no configs
     spark = SparkSession.builder.master("local[8]").getOrCreate()
 
-    import duckdb
-
     import check_oracle as co
     import __spark_entry__ as entrymod
 
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = co.oracle_connection(sf_dir, spark)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -4,7 +4,10 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on
 DuckDB over the same parquet tables, then compares row count, column
 names, and order-insensitive values (columns sorted by name, rows sorted
 by all columns, NaN≡NULL normalization). Reports per-query PASS/FAIL
-with first differing rows, and the Spark and DuckDB seconds apart.
+with first differing rows, the Spark and DuckDB seconds apart, and the
+process's peak RSS so far. DuckDB runs under a memory limit of host RAM
+minus the Spark driver heap, so a runaway oracle is a reported FAIL
+(DuckDB's out-of-memory error), not an exhausted host.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -13,6 +16,7 @@ from __future__ import annotations
 
 import math
 import os
+import resource
 import sys
 import time
 
@@ -37,6 +41,34 @@ def oracle_type_violations(con, sql: str):
         for c, t in zip(rel.columns, rel.types)
         if str(t) not in ALLOWED_DUCK_TYPES
     ]
+
+
+TABLES = [
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+]
+
+
+def oracle_connection(sf_dir: str, spark):
+    """DuckDB connection with a view per testdata table: the oracle side
+    of every Spark-vs-DuckDB comparison. Its ``memory_limit`` is host
+    RAM minus ``spark``'s driver heap (the JVM shares the host)."""
+    import duckdb
+
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{max(ram - heap, 1 << 30) >> 20}MiB'")
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def peak_rss_mb() -> int:
+    """This process's peak resident set so far (DuckDB runs in it)."""
+    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss >> 10
 
 
 def norm_cell(v):
@@ -66,21 +98,11 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import duckdb
-
     import __spark_entry__ as entrymod
     from covid_custom_sql_engine_spark import get_spark
 
     spark = get_spark("oracle_check")
-
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir, spark)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -94,12 +116,15 @@ def main():
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
+            print(f"FAIL {name}: spark error: {e} (peak rss {peak_rss_mb()} MB)")
             n_fail += 1
             continue
         spark_s = time.time() - t0
         if name not in oracles:
-            print(f"OK(rows-only) {name}: {len(srows)} rows, spark {spark_s:.1f}s")
+            print(
+                f"OK(rows-only) {name}: {len(srows)} rows, spark {spark_s:.1f}s, "
+                f"peak rss {peak_rss_mb()} MB"
+            )
             n_pass += 1
             continue
         t0 = time.time()
@@ -109,10 +134,13 @@ def main():
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
         except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
+            print(f"FAIL {name}: duckdb error: {e} (peak rss {peak_rss_mb()} MB)")
             n_fail += 1
             continue
-        times = f"spark {spark_s:.1f}s, duckdb {time.time() - t0:.1f}s"
+        times = (
+            f"spark {spark_s:.1f}s, duckdb {time.time() - t0:.1f}s, "
+            f"peak rss {peak_rss_mb()} MB"
+        )
         problems = []
         if bad_types:
             problems.append(
